@@ -16,36 +16,37 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+_REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(_REPO))
 
 from pyanamo_spark.registry import QUERIES, load_all
 from pyanamo_spark.session import get_spark
 
 # Every query name that has ever appeared in a driver-parsed
-# BENCH_r*.json inline `queries` map (r02-r12). The driver's perf
-# comparison diffs successive rounds' inline maps and reports any name
-# that vanishes as a dropped query (PERF_r12.json recorded 181
+# BENCH_r*.json inline `queries` map. The perf comparison diffs
+# successive rounds' inline maps and reports any name that vanishes
+# as a dropped query (PERF_r12.json recorded 181
 # "queries_dropped" purely because the inline map was the
 # top-15-of-that-run, which changes between rounds). The contract is
-# add-only — never remove or rename an entry — so these names are
-# emitted unconditionally; the rest of the stdout byte budget is
-# filled with the currently slowest queries (see _SUMMARY_BUDGET).
-_PINNED_SUMMARY = (
-    "q_basket_rules", "q_bm25", "q_bpe_encode", "q_contrastive_pairs",
-    "q_crossval", "q_curation_funnel", "q_decontaminate",
-    "q_dedup_clusters", "q_dedup_contain", "q_dedup_incremental",
-    "q_dedup_lines", "q_dedup_near", "q_dedup_ngram", "q_dedup_simhash",
-    "q_dup_passages", "q_dup_spans", "q_equidepth", "q_global_ids",
-    "q_hybrid_search", "q_index_lifecycle", "q_knn_ivf", "q_log_mine",
-    "q_logit_score", "q_outliers", "q_overlap_estimate", "q_pagerank",
-    "q_partition_split", "q_pca_project", "q_percentiles",
-    "q_repetition", "q_semantic_prune", "q_source_overlap",
-    "q_table_stats", "q_tfidf",
+# add-only, so these names are emitted unconditionally; the rest of
+# the stdout byte budget is filled with the currently slowest queries
+# (see _SUMMARY_BUDGET). Derived from the committed records, so each
+# new record's names join the set without a hand edit.
+_PINNED_SUMMARY = tuple(
+    sorted(
+        {
+            name
+            for p in _REPO.glob("BENCH_r[0-9][0-9].json")
+            for name in (
+                json.loads(p.read_text()).get("parsed") or {}
+            ).get("queries")
+            or {}
+        }
+    )
 )
 # The driver captures only the LAST 2000 bytes of stdout (BENCH_r01
 # recorded `parsed: null` when the full 97-query line overflowed it),
@@ -113,20 +114,8 @@ def main() -> None:
     # it (BENCH_r01 recorded `parsed: null` from exactly that).  The
     # LAST line printed is a compact summary guaranteed to survive a
     # tail capture: total + the slowest queries + a pointer to the file.
-    repo = Path(__file__).resolve().parent
-    full_path = repo / "BENCH_full.json"
+    full_path = _REPO / "BENCH_full.json"
     full_path.write_text(json.dumps(full, indent=1))
-    # per-round archive: BENCH_full.json is overwritten every run, which
-    # loses the previous round's per-query detail (r02's timings survive
-    # only as a top-15). The driver writes BENCH_r{N}.json after this
-    # round's bench, so the current round is 1 + the highest recorded one.
-    rounds = [
-        int(m.group(1))
-        for p in repo.glob("BENCH_r[0-9][0-9].json")
-        if (m := re.match(r"BENCH_r(\d+)\.json$", p.name))
-    ]
-    archive = repo / f"BENCH_full_r{(max(rounds, default=0) + 1):02d}.json"
-    archive.write_text(json.dumps(full, indent=1))
     print(summary_line(timings, total, sf, str(full_path), errors, rep_errors))
     spark.stop()
 
@@ -141,41 +130,44 @@ def summary_line(
 ) -> str:
     """The one stdout JSON line: every _PINNED_SUMMARY name that has a
     timing (add-only contract — a name the driver has ever parsed must
-    keep appearing), then the currently slowest remaining queries until
-    the _SUMMARY_BUDGET byte budget is reached."""
-    summary = {
-        k: round(timings[k], 3) for k in _PINNED_SUMMARY if k in timings
-    }
-    compact = {
-        "metric": "declared_query_suite_wall_clock",
-        "value": total,
-        "unit": "sec",
-        "sf": sf,
-        "n_queries": len(timings),
-        "queries": summary,
-        "queries_file": queries_file,
-        "errors": errors,
-        "rep_errors": rep_errors,
-    }
+    keep appearing), then the currently slowest remaining queries while
+    the line stays within _SUMMARY_BUDGET. Times are rounded to 0.01 s.
+
+    What gives way over the budget, in order: top-up names, error text
+    past 60 characters, then the 0.01 s precision (0.1 s) together with
+    the rest of the error text. A pinned name or a failed query's name
+    never does: a line that still runs over is printed as it is rather
+    than replaced by nothing (BENCH_r01's parsed:null)."""
+
+    def size(compact) -> int:
+        return len(json.dumps(compact, separators=(",", ":")))
+
+    for digits, err_len in ((2, None), (2, 60), (1, 0)):
+        summary = {
+            k: round(timings[k], digits) for k in _PINNED_SUMMARY if k in timings
+        }
+        compact = {
+            "metric": "declared_query_suite_wall_clock",
+            "value": total,
+            "unit": "sec",
+            "sf": sf,
+            "n_queries": len(timings),
+            "queries": summary,
+            "queries_file": queries_file,
+            "errors": {n: e[:err_len] for n, e in errors.items()},
+            "rep_errors": rep_errors,
+        }
+        if size(compact) <= _SUMMARY_BUDGET:
+            break
     for k, v in sorted(timings.items(), key=lambda kv: -kv[1]):
         if k in summary:
             continue
-        candidate = dict(summary)
-        candidate[k] = round(v, 3)
-        compact["queries"] = candidate
-        if len(json.dumps(compact, separators=(",", ":"))) > _SUMMARY_BUDGET:
+        compact["queries"] = {**summary, k: round(v, digits)}
+        if size(compact) > _SUMMARY_BUDGET:
             break
-        summary = candidate
+        summary = compact["queries"]
     compact["queries"] = {n: summary[n] for n in sorted(summary)}
-    line = json.dumps(compact, separators=(",", ":"))
-    if len(line) > _SUMMARY_BUDGET:
-        # only reachable when hard-failure messages inflate `errors`;
-        # keep the line parseable (a missing/truncated JSON line is
-        # worse than a short error text — BENCH_r01's parsed:null)
-        compact["errors"] = {n: e[:60] for n, e in errors.items()}
-        line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= _SUMMARY_BUDGET, f"summary line too long ({len(line)} B)"
-    return line
+    return json.dumps(compact, separators=(",", ":"))
 
 
 if __name__ == "__main__":

@@ -116,36 +116,23 @@ class NgramIndex:
     - ``prefix_pool``: the df-ranked postings (df >= 2 only — df=1
       shingles cannot pair; rarest-first per doc) already cut to the
       FAMILY_MIN_T prefix bound — the largest prefix any member needs.
-      Caching the pool instead of the full ranked set keeps only
+      Persisting the pool instead of the full ranked set keeps only
       ~(1-t)·|doc| rows per doc in executor storage; ``prefix(t)``
       re-filters it for tighter thresholds.
 
-    Before r07 each query rebuilt everything per call — clusters even
-    re-ran ngram end-to-end — so the tokenize + df-count + rank-window
-    cost was paid up to three times per suite run. At 100 TB the df
-    table alone is a full corpus shuffle; sharing it is the difference
-    between one posting pass and three.
+    ``ngram_index`` builds and persists these frames on every call,
+    and the query passes them down. Calls that do not clear the cache
+    in between share the persisted data through Spark's cache manager,
+    which serves a rebuilt identical plan from the cached one; a
+    different ``documents`` view is a different plan and gets its own
+    answer. At 100 TB the df table alone is a full corpus shuffle, so
+    a session running the whole family pays the posting pass once.
     """
 
-    def __init__(self, prepped, postings, prefix_pool, cacheable=False):
+    def __init__(self, prepped, postings, prefix_pool):
         self.prepped = prepped
         self.postings = postings
         self.prefix_pool = prefix_pool
-        self.cacheable = cacheable
-        #: additional persisted scratch frames tied to this corpus's
-        #: lifetime (e.g. the postings-bucket table) — released by the
-        #: same eviction loop that unpersists prepped/prefix_pool, so
-        #: retention stays bounded at one corpus (ADVICE r10)
-        self.scratch: list[DataFrame] = []
-        #: lazily-memoized VERIFIED (doc_a, doc_b, jaccard) frame —
-        #: q_dedup_ngram's output IS q_dedup_clusters' input graph, so
-        #: the family computes candidates+verify once per corpus
-        #: (persisted by ngram.verified_ngram_pairs when cacheable;
-        #: the frame is output-sized — thousands of pairs, not
-        #: postings — so the storage cost is trivial)
-        self.ngram_pairs = None
-        #: lazily-built per-doc constants table (see doc_stats)
-        self._doc_stats = None
 
     def doc_stats(self):
         """(doc_id, n_sh, n2) for every doc with a non-empty prefix —
@@ -157,20 +144,14 @@ class NgramIndex:
         identical 4.9M-pair output). One row per candidate-eligible
         doc; any doc in a bucket has a pool row, so the re-attach
         joins lose nothing. dropDuplicates needs no exchange: the
-        pool inherits prepped's doc_id partitioning."""
-        if self._doc_stats is not None:
-            lvl = self._doc_stats.storageLevel
-            if not self.cacheable or lvl.useMemory or lvl.useDisk:
-                return self._doc_stats
-            self._doc_stats = None
-        stats = self.prefix_pool.select(
-            "doc_id", "n_sh", "n2"
-        ).dropDuplicates(["doc_id"])
-        if self.cacheable:
-            stats = stats.persist()
-            self.scratch.append(stats)
-        self._doc_stats = stats
-        return stats
+        pool inherits prepped's doc_id partitioning. Persisted: the
+        caller's broadcast-size probe and both re-attach joins read
+        it."""
+        return (
+            self.prefix_pool.select("doc_id", "n_sh", "n2")
+            .dropDuplicates(["doc_id"])
+            .persist()
+        )
 
     def prefix(self, t: float):
         """(doc_id, lang, size_bucket, n_sh, h, rnk, n2) rows of each
@@ -187,64 +168,26 @@ class NgramIndex:
         )
 
 
-#: one live index per (application, corpus); stale corpora unpersist
-_NGRAM_INDEX: dict[tuple[str, str], NgramIndex] = {}
-
-
-def ngram_index(spark: SparkSession, sf_dir: str) -> NgramIndex:
-    """Build (or reuse) the shared prefix-filter index.
-
-    Cached only when ``sf_dir`` names a real fixture directory: tests
-    plant ad-hoc ``documents`` temp views under sentinel sf_dirs, and
-    a cache hit there would serve a previous test's corpus. Evicting
-    other keys on insert keeps at most one corpus pinned per app —
-    back-to-back sf0.01/sf0.1 runs don't stack executor storage.
-    """
-    import os
-
+def ngram_index(spark: SparkSession) -> NgramIndex:
+    """Build the shared prefix-filter index over the ``documents``
+    view's mutant corpus (see NgramIndex for how calls share it)."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cacheable = bool(sf_dir) and os.path.isdir(sf_dir)
-    if cacheable and key in _NGRAM_INDEX:
-        idx = _NGRAM_INDEX[key]
-        # a session-wide spark.catalog.clearCache() (bench.py runs one
-        # after every query) unpersists the index frames OUT FROM UNDER
-        # the memo — serving them then recomputes every action without
-        # re-caching. Detect the eviction and rebuild instead.
-        lvl = idx.prepped.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return idx
-        _NGRAM_INDEX.pop(key)
-    if cacheable:
-        # evict stale corpora BEFORE persisting the new index: the
-        # cache manager keys on the analyzed plan, so if an old entry's
-        # plan happens to match the new one (same underlying view),
-        # unpersisting it afterwards would silently drop the new cache
-        for k in [k for k in _NGRAM_INDEX if k != key]:
-            old = _NGRAM_INDEX.pop(k)
-            try:
-                old.prepped.unpersist()
-                old.prefix_pool.unpersist()
-                for frame in old.scratch:
-                    frame.unpersist()
-                if old.ngram_pairs is not None:
-                    old.ngram_pairs.unpersist()
-            except Exception:
-                # the entry may belong to an already-stopped session
-                # (new SparkSession in the same process) — its cache
-                # died with the session; dropping the dict entry is
-                # all that's left to do
-                pass
-    corpus = corpus_with_mutants(spark)
-    if cacheable:
-        # the doc_id repartition (required below for the cache's output
-        # partitioning) happens BEFORE tokenization on the narrow
-        # (doc_id, text, lang) rows: expressions compute in the stage
-        # that feeds the exchange, so tokenize+shingle+hash — the
-        # build's CPU — would otherwise run on the scan's few parquet
-        # splits (2-4 on the fixture) and strand the other cores
-        corpus = corpus.repartition("doc_id")
+    # the doc_id repartition (required below for the cache's output
+    # partitioning) happens BEFORE tokenization on the narrow
+    # (doc_id, text, lang) rows: expressions compute in the stage
+    # that feeds the exchange, so tokenize+shingle+hash — the
+    # build's CPU — would otherwise run on the scan's few parquet
+    # splits (2-4 on the fixture) and strand the other cores
+    corpus = corpus_with_mutants(spark).repartition("doc_id")
+    # persisted (spillable), not localCheckpoint: the shingle arrays
+    # are corpus-sized and must be allowed to overflow to disk on big
+    # fixtures. Cached PRE-PARTITIONED on doc_id (the repartition
+    # above survives the projection): the verify joins key on doc
+    # ids, so the cache's output partitioning satisfies
+    # ENSURE_REQUIREMENTS and only the (tiny) candidate-pair side
+    # exchanges — the corpus-sized shingle-array rows are shuffled
+    # ONCE at build instead of twice per family query
     prepped = (
         corpus.select(
             "doc_id",
@@ -259,46 +202,35 @@ def ngram_index(spark: SparkSession, sf_dir: str) -> NgramIndex:
             F.array_distinct(hashed_shingles("text")).alias("sh"),
         )
         .withColumn("n_sh", F.size("sh"))
+        .persist()
     )
-    if cacheable:
-        # persisted (spillable), not localCheckpoint: the shingle
-        # arrays are corpus-sized and must be allowed to overflow to
-        # disk on big fixtures. Cached PRE-PARTITIONED on doc_id (the
-        # repartition above survives the projection): the verify joins
-        # key on doc ids, so the cache's output partitioning satisfies
-        # ENSURE_REQUIREMENTS and only the (tiny) candidate-pair side
-        # exchanges — the corpus-sized shingle-array rows are shuffled
-        # ONCE at build instead of twice per family query
-        prepped = prepped.persist()
     postings = prepped.select(
         "doc_id", "lang", "size_bucket", "n_sh", F.explode("sh").alias("h")
     )
     # df via aggregate + join-back, NOT a count-over-window: the agg
     # partial-combines map-side so its exchange carries only distinct
     # shingles, while a window would sort-shuffle EVERY posting row by
-    # h (measured 1.6x worse on the sf1 gate)
-    df_tab = df2 = postings.groupBy("h").agg(F.count("*").alias("df")).filter(
-        F.col("df") >= 2
+    # h (measured 1.6x worse on the sf1 gate).
+    #
+    # adaptive join-back (r12): the df>=2 table is the SHARED-shingle
+    # vocabulary — tiny next to the postings (813k rows / 13 MB at
+    # sf10, vs 27M posting rows). When it fits a broadcast, the
+    # join-back keeps the postings' doc_id partitioning, so the rank
+    # window below needs NO exchange: both corpus-sized shuffles of
+    # the prefix build (postings by h for the join, df>=2 postings
+    # back by doc_id for the window) disappear — measured 8.7 -> 4.1 s
+    # at sf10. The df aggregation's own exchange still runs, but it
+    # carries one row per distinct shingle, not per posting. Above the
+    # bound (a 100 TB vocabulary is not broadcastable) the plan falls
+    # back to the shuffle join unchanged; the persisted df table makes
+    # the probe count a one-small-frame action either way.
+    df_tab = (
+        postings.groupBy("h")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") >= 2)
+        .persist()
     )
-    if cacheable:
-        # adaptive join-back (r12): the df>=2 table is the SHARED-
-        # shingle vocabulary — tiny next to the postings (813k rows /
-        # 13 MB at sf10, vs 27M posting rows). When it fits a
-        # broadcast, the join-back keeps the postings' doc_id
-        # partitioning, so the rank window below needs NO exchange:
-        # both corpus-sized shuffles of the prefix build (postings by
-        # h for the join, df>=2 postings back by doc_id for the
-        # window) disappear — measured 8.7 -> 4.1 s at sf10. The df
-        # aggregation's own exchange still runs, but it carries one
-        # row per distinct shingle, not per posting. Above the bound
-        # (a 100 TB vocabulary is not broadcastable) the plan falls
-        # back to the shuffle join unchanged; the persisted df table
-        # makes the probe count a one-small-frame action either way.
-        df_tab = df_tab.persist()
-        if df_tab.count() <= _DF_BROADCAST_MAX:
-            df2 = F.broadcast(df_tab)
-        else:
-            df2 = df_tab
+    df2 = F.broadcast(df_tab) if df_tab.count() <= _DF_BROADCAST_MAX else df_tab
     ranked = (
         postings.join(df2, "h")
         .withColumn(
@@ -318,13 +250,5 @@ def ngram_index(spark: SparkSession, sf_dir: str) -> NgramIndex:
     prefix_pool = ranked.filter(
         F.col("rnk")
         <= F.col("n_sh") - F.ceil(F.lit(FAMILY_MIN_T) * F.col("n_sh")) + 1
-    )
-    if cacheable:
-        prefix_pool = prefix_pool.persist()
-    idx = NgramIndex(prepped, postings, prefix_pool, cacheable=cacheable)
-    if cacheable:
-        # the persisted df table rides the index's eviction loop like
-        # the bucket scratch frames
-        idx.scratch.append(df_tab)
-        _NGRAM_INDEX[key] = idx
-    return idx
+    ).persist()
+    return NgramIndex(prepped, postings, prefix_pool)

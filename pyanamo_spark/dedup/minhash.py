@@ -219,67 +219,42 @@ def candidate_pairs(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     return pair_ids.join(sh_a, "doc_a").join(sh_b, "doc_b")
 
 
-#: one live mutant-corpus candidate table per (application, fixture
-#: dir) — q_dedup_near AND q_contrastive_pairs consume the identical
-#: banded candidates (candidate generation is threshold-independent;
-#: only their verify floors differ), so the signature + banding +
-#: join-back pipeline runs once per corpus instead of twice per suite
-#: (the ngram_index precedent). Guarded like ngram_index: only real
-#: fixture dirs cache (tests plant ad-hoc views under sentinel dirs),
-#: stale keys evict on insert, and a clearCache-unpersisted frame is
-#: rebuilt rather than silently recomputed per action.
-_MUTANT_CANDIDATES: dict[tuple[str, str], DataFrame] = {}
-
-
-def mutant_candidate_pairs(
-    spark: SparkSession, sf_dir: str | None
-) -> DataFrame:
+def mutant_candidate_pairs(spark: SparkSession) -> DataFrame:
     """(doc_a, doc_b, jaccard_raw) for every LSH candidate pair of the
-    mutant corpus — the EXACT unrounded shingle Jaccard, computed once
-    and memoized per (application, fixture dir).
+    mutant corpus — the EXACT unrounded shingle Jaccard, persisted.
+    q_dedup_near (at 0.5) and q_contrastive_pairs (at 0.35) consume
+    the identical banded candidates (candidate generation is
+    threshold-independent; only their verify floors differ), so in a
+    session that does not clear the cache between them Spark's cache
+    manager serves the signature + banding + verify pipeline once.
 
-    r11: the memo stores the verified-jaccard table, not the
-    array-carrying candidate frame it used to — both family consumers
-    (q_dedup_near at 0.5, q_contrastive_pairs at 0.35) only ever
-    filtered a jaccard derived from the arrays, so persisting the
-    shingle arrays per pair (~2 KB/row, ~800 MB at sf1) materialized
-    content no one re-read; the verify expression now streams through
-    one pipeline into a 24 B/row cache. |A∪B| is computed as
+    r11: the persisted table is the verified-jaccard one, not the
+    array-carrying candidate frame — both consumers only ever filter
+    a jaccard derived from the arrays, so persisting the shingle
+    arrays per pair (~2 KB/row, ~800 MB at sf1) materialized content
+    no one re-read; the verify expression now streams through one
+    pipeline into a 24 B/row cache. |A∪B| is computed as
     |A|+|B|-|A∩B| (identical integers → identical double) to skip the
     per-row array_union allocation."""
-    import os
-
-    cacheable = bool(sf_dir) and os.path.isdir(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir or "")
-    if cacheable and key in _MUTANT_CANDIDATES:
-        cached = _MUTANT_CANDIDATES[key]
-        lvl = cached.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return cached
-        _MUTANT_CANDIDATES.pop(key)
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    pairs = candidate_pairs(spark, corpus_with_mutants(spark)).select(
-        "doc_a",
-        "doc_b",
-        (
-            inter / (F.size("sh_a") + F.size("sh_b") - inter)
-        ).alias("jaccard_raw"),
+    return (
+        candidate_pairs(spark, corpus_with_mutants(spark))
+        .select(
+            "doc_a",
+            "doc_b",
+            (
+                inter / (F.size("sh_a") + F.size("sh_b") - inter)
+            ).alias("jaccard_raw"),
+        )
+        .persist()
     )
-    if cacheable:
-        for k in [k for k in _MUTANT_CANDIDATES if k != key]:
-            _MUTANT_CANDIDATES.pop(k).unpersist()
-        pairs = pairs.persist()
-        _MUTANT_CANDIDATES[key] = pairs
-    return pairs
 
 
-def near_dup_pairs(
-    spark: SparkSession, sf_dir: str | None = None
-) -> DataFrame:
+def near_dup_pairs(spark: SparkSession) -> DataFrame:
     """X2 near-dup dedup (library form): MinHash-LSH candidates
     verified by exact shingle Jaccard ≥ 0.5 over the mutant corpus —
     the raw pair output q_dedup_near's audit certifies."""
-    pairs = mutant_candidate_pairs(spark, sf_dir)
+    pairs = mutant_candidate_pairs(spark)
     return (
         pairs.withColumn("jaccard", F.round("jaccard_raw", 6))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -334,7 +309,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the planted set is enforced by the verify stage's exact
     filter by construction; full recall beyond it is the planted-
     mutant test's job (tests/test_dedup.py)."""
-    pairs = near_dup_pairs(spark, sf_dir)
+    pairs = near_dup_pairs(spark)
 
     def hs(col_sql: str):  # shingles() takes a SQL expression string
         return F.array_distinct(

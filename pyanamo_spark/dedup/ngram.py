@@ -92,10 +92,11 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         intersect per candidate pair, candidates ≈ true near-dups);
         |A∪B| = |A|+|B|−|A∩B| so only the intersection is computed.
       - the tokenized corpus, global-df table, and rarest-first rank
-        come from the SHARED ``ngram_index`` (persisted once per
-        corpus): q_dedup_contain reuses them and q_dedup_clusters
-        consumes this query's pairs, so the posting pass is paid once
-        per suite run instead of three times.
+        come from the SHARED ``ngram_index`` (persisted per call):
+        q_dedup_contain builds the identical frames and
+        q_dedup_clusters consumes this query's pairs, so in a session
+        that does not clear the cache between them Spark's cache
+        manager serves the posting pass once instead of three times.
 
     sf10 COST-FLOOR ANALYSIS (r12, closing the r10 ≤25 s order —
     actual 28.3 s best-of-3 after this round's two cuts): stage
@@ -114,24 +115,17 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyanamo_spark.dedup import ngram_index
 
-    return verified_ngram_pairs(ngram_index(spark, sf_dir))
+    return verified_ngram_pairs(ngram_index(spark))
 
 
 def verified_ngram_pairs(idx) -> DataFrame:
-    """The family's verified (doc_a, doc_b, jaccard) pair table,
-    memoized on the shared index: q_dedup_ngram emits it and
-    q_dedup_clusters closes it into components, so candidates+verify
-    run once per corpus instead of once per family member. The frame
-    is OUTPUT-sized (true near-dup pairs), so persisting it costs
-    nothing next to the postings it saves recomputing."""
-    if idx.ngram_pairs is not None:
-        lvl = idx.ngram_pairs.storageLevel
-        if lvl.useMemory or lvl.useDisk:
-            return idx.ngram_pairs
-        # a session-wide clearCache() dropped the memoized frame's
-        # storage — recompute and re-persist rather than serving a
-        # frame that silently recomputes on every action
-        idx.ngram_pairs = None
+    """The family's verified (doc_a, doc_b, jaccard) pair table, built
+    on the shared index and persisted: q_dedup_ngram emits it and
+    q_dedup_clusters closes it into components, so in a session that
+    does not clear the cache between them Spark's cache manager serves
+    candidates+verify once. The frame is OUTPUT-sized (true near-dup
+    pairs), so persisting it costs nothing next to the postings it
+    saves recomputing."""
     prepped = idx.prepped
     # global document frequency — the total order for prefix ranking
     # (df asc, h asc as tiebreak). Rarest-first puts boilerplate last.
@@ -174,22 +168,12 @@ def verified_ngram_pairs(idx) -> DataFrame:
         )
         .filter(F.size("ms") > 1)
     )
-    if idx.cacheable:
-        # persisted with the INDEX's lifetime, not the session's
-        # (ADVICE r10: the old persist was released by nothing) —
-        # registering on idx puts it under ngram_index's eviction
-        # loop, the same bounded one-corpus retention prepped and
-        # prefix_pool already have. An eager materialize-then-release
-        # here was tried first and cost ~+1s/query at sf0.1 (an extra
-        # full pipeline action); recompute-on-demand would be worse:
-        # the persisted prefix-pool child defeats AQE exchange-stage
-        # reuse (the q_zipf r11 finding), so the three consumer
-        # branches would each re-shuffle the postings. Non-cacheable
-        # (sentinel test) corpora skip the persist entirely: their
-        # single-action recompute of the tiny aggregation is cheaper
-        # than any retention.
-        buckets = buckets.persist()
-        idx.scratch.append(buckets)
+    # persisted: an eager materialize-then-release here cost
+    # ~+1s/query at sf0.1 (an extra full pipeline action), and
+    # recompute-on-demand would be worse — the persisted prefix-pool
+    # child defeats AQE exchange-stage reuse (the q_zipf r11 finding),
+    # so the three consumer branches would each re-shuffle the postings
+    buckets = buckets.persist()
     ratio_ok = F.least("a.n_sh", "b.n_sh") >= F.lit(THRESHOLD).cast(
         "double"
     ) * F.greatest("a.n_sh", "b.n_sh")
@@ -306,7 +290,7 @@ def verified_ngram_pairs(idx) -> DataFrame:
     # count allows it (one row per candidate-eligible doc); beyond the
     # bound the joins fall back to shuffles, which the deduped
     # 1-pair-per-row side keeps cheap
-    bcast = not idx.cacheable or stats.count() <= _STATS_BROADCAST_MAX
+    bcast = stats.count() <= _STATS_BROADCAST_MAX
     sa = stats.select(
         F.col("doc_id").alias("doc_a"),
         F.col("n_sh").alias("na"),
@@ -367,10 +351,7 @@ def verified_ngram_pairs(idx) -> DataFrame:
         .withColumn("jaccard", F.round(raw_jaccard, 6))
         .select("doc_a", "doc_b", "jaccard")
     )
-    if idx.cacheable:
-        pairs = pairs.persist()
-        idx.ngram_pairs = pairs
-    return pairs
+    return pairs.persist()
 
 
 # ---------------------------------------------------------------------
@@ -433,7 +414,7 @@ def q_dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver run.
 
     The tokenized corpus, global-df table, and rarest-first rank come
-    from the SHARED ``ngram_index`` (persisted once per corpus, see
+    from the SHARED ``ngram_index`` (persisted per call, see
     q_dedup_ngram): df ascending is the prefix total order, and df=1
     shingles drop before ranking — no second doc shares them, every
     shared shingle has df >= 2, so the pigeonhole recall bound is
@@ -443,7 +424,7 @@ def q_dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from fractions import Fraction
 
-    idx = ngram_index(spark, sf_dir)
+    idx = ngram_index(spark)
     prepped = idx.prepped
     # contained-side prefix: |A| - ceil(T·|A|) + 1 lowest-df shingles
     # (a subset of the cached FAMILY_MIN_T pool — same per-doc order)
@@ -500,7 +481,7 @@ def q_dedup_contain(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_sh").alias("na"),
         F.col("n2").alias("n2a"),
     )
-    if not idx.cacheable or stats.count() <= _STATS_BROADCAST_MAX:
+    if stats.count() <= _STATS_BROADCAST_MAX:
         sa = F.broadcast(sa)
     candidates = (
         m.join(sa, "contained_doc")

@@ -66,9 +66,9 @@ def mine_contrastive(
 ) -> DataFrame:
     """(anchor_id, positive_id, jaccard, slot, negative_id) triplets.
 
-    ``pairs`` lets the declared query hand in the memoized
-    mutant-corpus candidate table (minhash.mutant_candidate_pairs) so
-    the LSH pipeline is shared with q_dedup_near; ad-hoc corpora
+    ``pairs`` lets the declared query hand in the persisted
+    mutant-corpus candidate table (minhash.mutant_candidate_pairs),
+    whose LSH pipeline q_dedup_near builds identically; ad-hoc corpora
     (tests) compute their own candidates."""
     return mine_contrastive_parts(
         spark, corpus, jaccard_min, n_negatives, pairs
@@ -97,7 +97,7 @@ def mine_contrastive_parts(
     if "jaccard_raw" not in pairs.columns:
         # ad-hoc corpora hand in raw array-carrying candidates; the
         # declared query hands in minhash.mutant_candidate_pairs'
-        # memoized (doc_a, doc_b, jaccard_raw) table, where the verify
+        # persisted (doc_a, doc_b, jaccard_raw) table, where the verify
         # already ran inside the shared build (r11)
         inter = F.size(F.array_intersect("sh_a", "sh_b"))
         pairs = pairs.withColumn(
@@ -117,8 +117,8 @@ def mine_contrastive_parts(
     )
     # positives has SEVEN consumers across the miner and the declared
     # audit (recall leg, both pair-set orientations twice, slot
-    # fan-out): each would re-derive it — against the memoized pair
-    # cache on the declared path, against the whole LSH band pipeline
+    # fan-out): each would re-derive it — against the persisted pair
+    # table on the declared path, against the whole LSH band pipeline
     # for ad-hoc corpora — and the duplicated subtrees made the final
     # action's plan balloon (the r12-start explain was 250 KB of
     # repeated InMemoryRelation trees). One eager localCheckpoint
@@ -257,7 +257,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = corpus_with_mutants(spark)
     positives, trips = mine_contrastive_parts(
-        spark, corpus, pairs=mutant_candidate_pairs(spark, sf_dir)
+        spark, corpus, pairs=mutant_candidate_pairs(spark)
     )
 
     def hs(col_sql: str):
@@ -288,7 +288,7 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the accidental-positive anti-join is still FOUND). positives is
     # localCheckpoint'ed by mine_contrastive_parts (r12), so this leg
     # scans the materialized pair set rather than re-filtering the
-    # memoized candidate cache.
+    # persisted candidate table.
     found = (
         positives.filter(
             F.col("positive_id") - F.col("anchor_id") == MUTANT_OFFSET

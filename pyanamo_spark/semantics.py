@@ -232,15 +232,16 @@ def _materialize_derived(spark, sf_dir: str) -> None:
     queries pay the same string-synthesis + explode repeatedly. The
     derivation is deterministic pure arithmetic, so the parquet rows
     are byte-identical to the view's rows — DuckDB oracles keep
-    inlining the CTE form. Set SPARK_GRAFT_MATERIALIZE_VIEWS=0 to keep
-    plain views (plan-shape debugging).
+    inlining the CTE form. The parquet directory is removed when the
+    interpreter exits.
     """
+    import atexit
     import os
+    import shutil
     import tempfile
 
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE_VIEWS", "1") == "0":
-        return
     root = tempfile.mkdtemp(prefix="pyanamo_fixtures_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     for name in _MATERIALIZED_VIEWS:
         path = os.path.join(root, name)
         spark.table(name).write.mode("overwrite").parquet(path)

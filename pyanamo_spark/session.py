@@ -54,7 +54,7 @@ def _activate_protobuf_shim() -> None:
 
 
 def get_spark(app_name: str = "pyanamo_spark", cpus: int | str | None = None) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     _activate_protobuf_shim()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -119,37 +119,19 @@ def _plane_matrix(dim: int, n_planes: int = N_PLANES):
     return m
 
 
-#: one dimension probe per (application, corpus): q_knn_lsh needs the
-#: vector length to size its literal planes, and a one-row first() at
-#: EVERY DataFrame construction would break the registry sweep's
-#: plans-build-lazily property — memoizing keeps it to one tiny job
-#: per session/corpus (a per-row slice-the-planes form that needed no
-#: probe at all measured ~2x slower per row: 2.0 -> 3.5 s warm at sf1)
-_DIM_CACHE: dict[tuple[str, str], int] = {}
-
-
-def _embedding_dim(spark: SparkSession, sf_dir: str) -> int:
-    import os
-
-    # Only memoize real on-disk corpora (the ngram-index rule,
-    # dedup/__init__.py): an ad-hoc temp view under a blank/bogus
-    # sf_dir may be re-registered later with different data, and an
-    # empty probe must never pin dim=1 for a view that fills up —
-    # wrong-dim literal planes null every zip_with dot and silently
-    # collapse all rows into bucket 0 (full-scan LSH).
-    cacheable = bool(sf_dir) and os.path.isdir(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if cacheable and key in _DIM_CACHE:
-        return _DIM_CACHE[key]
+def _embedding_dim(spark: SparkSession) -> int:
+    """Vector length of the ``embeddings`` view, probed with one-row
+    ``first()`` — q_knn_lsh needs it to size its literal planes (a
+    per-row slice-the-planes form that needed no probe at all measured
+    ~2x slower per row: 2.0 -> 3.5 s warm at sf1). Probed on every
+    call, so a view that is replaced or fills up later is sized from
+    its own rows: wrong-dim literal planes would null every zip_with
+    dot and silently collapse all rows into bucket 0 (full-scan LSH)."""
     head = spark.table("embeddings").select("embedding").first()
     if head is None or head[0] is None:
-        # empty corpus: any dim yields the correct empty result;
-        # do NOT cache — the table may be populated later
+        # empty corpus: any dim yields the correct empty result
         return 1
-    dim = len(head[0])
-    if cacheable:
-        _DIM_CACHE[key] = dim
-    return dim
+    return len(head[0])
 
 
 def _bucket(emb_col: str, dim: int):
@@ -173,13 +155,13 @@ def _bucket(emb_col: str, dim: int):
     return b
 
 
-def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def lsh_topk(spark: SparkSession) -> DataFrame:
     """Sign-LSH bucketed top-k (the raw X3 scale path): queries probe
     only their own 8-bit bucket — at 100 TB the bucket column is a
     partition key and a probe touches 1/256th of the data. Library
     form; the declared q_knn_lsh wraps it in the recall audit."""
     emb = _with_norm(spark.table("embeddings")).withColumn(
-        "bucket", _bucket("embedding", _embedding_dim(spark, sf_dir))
+        "bucket", _bucket("embedding", _embedding_dim(spark))
     )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -277,7 +259,7 @@ def q_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit: the oracle asserts the guarantees (self at rank 1, recall
     ≥ the floor self-bucket membership implies, exact top-k counts)
     rather than asking DuckDB to replay md5-seeded hyperplanes."""
-    return ann_audit(spark, lsh_topk(spark, sf_dir), LSH_RECALL_FLOOR)
+    return ann_audit(spark, lsh_topk(spark), LSH_RECALL_FLOOR)
 
 
 #: quantized first stage keeps this many candidates per query before

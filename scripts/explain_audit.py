@@ -59,9 +59,10 @@ EXCHANGE_BUDGET = {
     # (doc, hash) ids except the verify joins. The price bought the
     # sf1 ratio down from 22.3x to ~5x at 10x data — the d^2 posting
     # blowup was the superlinear term. r07: the df-ranked postings
-    # live in the shared persisted ngram_index (built once, reused by
-    # q_dedup_contain/q_dedup_clusters, prepped pre-partitioned on
-    # doc_id so verify joins exchange only candidate ids); the audit
+    # live in the shared persisted ngram_index (the frames
+    # q_dedup_contain/q_dedup_clusters build too, prepped
+    # pre-partitioned on doc_id so verify joins exchange only
+    # candidate ids); the audit
     # now excludes cached-lineage exchanges, so this budget is the
     # live per-run topology
     "q_model_score": 4,  # train-split regr aggregation (two-phase)
@@ -288,8 +289,8 @@ EXCHANGE_BUDGET = {
     # candidate distinct + the two verification joins; wide rows are
     # (doc, shingle-hash) pairs or candidate ids, never text. r07:
     # the prefix pool and doc_id-partitioned corpus come from the
-    # shared ngram_index cache (its build exchanges are excluded from
-    # this count — they run once per corpus, not per query)
+    # persisted ngram_index (its build exchanges sit under cached
+    # lineage and are excluded from this count)
     "q_decontaminate": 6,  # bench-side distinct (1) + its broadcast
     # (1) + count-distinct's two-phase Expand aggregation; every
     # exchanged row is an id pair — document text stays map-side
@@ -503,24 +504,26 @@ PLAN_NOTES = {
         "(propagation still changing after 5 rounds), the operator "
         "auto-escalates to alternating large-star/small-star with an "
         "O(log n) round bound (dedup/clusters.py). The input pair "
-        "graph is the family's memoized verified_ngram_pairs frame "
-        "(see q_dedup_ngram), so in a shared session candidates+verify "
-        "run once for the whole family. BENCH numbers are per-query "
-        "COLD by harness design (bench.py clearCache()s between "
-        "queries), so the archived clusters figure includes one full "
-        "index build + pair generation + CC."
+        "graph is q_dedup_ngram's verified_ngram_pairs frame, persisted "
+        "on every call; in a session that does not clear the cache "
+        "between family queries, Spark's cache manager serves the "
+        "rebuilt identical plan from that data, so candidates+verify "
+        "run once. BENCH numbers are per-query COLD by harness design "
+        "(bench.py clearCache()s between queries), so the archived "
+        "clusters figure includes one full index build + pair "
+        "generation + CC."
     ),
     "q_dedup_ngram": (
-        "First family member to run also MATERIALIZES the shared "
-        "ngram_index (persisted tokenized corpus + FAMILY_MIN_T "
-        "prefix pool) AND the verified (doc_a, doc_b, jaccard) pair "
-        "frame (output-sized, persisted — q_dedup_clusters closes the "
-        "same pairs into components); q_dedup_contain reuses the "
-        "index, so per-query bench attribution charges the ~one-build "
-        "cost to whichever of the three runs first (r08: family total "
-        "at sf1 measured 66 s -> ~34 s; contain additionally prunes "
-        "candidates with the exact container-size bound |B| >= "
-        "ceil(T*|A|))."
+        "Every family call persists the shared ngram_index frames "
+        "(tokenized corpus + FAMILY_MIN_T prefix pool) and q_dedup_ngram "
+        "also persists the verified (doc_a, doc_b, jaccard) pair frame "
+        "(output-sized — q_dedup_clusters closes the same pairs into "
+        "components). Spark's cache manager shares that data between "
+        "calls that do not clear the cache, so without a clearCache "
+        "the first of the three to run pays the ~one build (r08: "
+        "family total at sf1 measured 66 s -> ~34 s; contain "
+        "additionally prunes candidates with the exact container-size "
+        "bound |B| >= ceil(T*|A|))."
     ),
 }
 

@@ -72,7 +72,7 @@ def main() -> None:
     def get_spark(app_name="profile", cpus=None):
         from pyspark.sql import SparkSession
 
-        cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         sess._activate_protobuf_shim()
         b = (
             SparkSession.builder.master(f"local[{cpus}]")

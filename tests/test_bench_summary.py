@@ -58,6 +58,17 @@ def test_line_fits_driver_tail_capture():
     )
 
 
+def test_slow_host_timings_keep_every_pinned_name_within_budget():
+    # 10x the timings (sf1, or a slow host) lengthens every inline
+    # value; only top-up names may give way
+    timings = {k: 10 * v for k, v in _fake_timings().items()}
+    line = bench.summary_line(timings, 1234.5, 1.0, "f.json", {}, {})
+    assert len(line) <= bench._SUMMARY_BUDGET
+    queries = json.loads(line)["queries"]
+    assert set(bench._PINNED_SUMMARY) <= set(queries)
+    assert all(v == round(v, 2) for v in queries.values())
+
+
 def test_hard_failures_truncate_instead_of_crashing():
     timings = _fake_timings()
     errors = {f"q_fail_{i}": "X" * 200 for i in range(12)}

@@ -73,7 +73,7 @@ def test_minhash_audit_certifies_and_catches_misses(spark, sf_dir):
         [], "doc_a long, doc_b long, jaccard double"
     )
     orig = mh.near_dup_pairs
-    mh.near_dup_pairs = lambda s, sf_dir=None: empty
+    mh.near_dup_pairs = lambda s: empty
     try:
         broken = QUERIES["q_dedup_near"].__wrapped__(spark, sf_dir).collect()
     finally:
@@ -226,88 +226,42 @@ def test_contain_prefix_filter_finds_all_boilerplate_pairs(
     )
 
 
-def test_ngram_index_cache_semantics(spark, sf_dir, tmp_path):
-    """The shared prefix-filter index caches per (app, sf_dir) for real
-    fixture directories, BYPASSES the cache for sentinel sf_dirs (tests
-    plant ad-hoc documents views there), and evicts+unpersists the old
-    corpus when a new one arrives."""
+def test_ngram_calls_share_spark_cache_without_a_memo(
+    spark, sf_dir, planted_views
+):
+    """Each q_dedup_ngram call builds and persists its frames afresh.
+    A second call in a session that did not clear the cache plans
+    against the first call's cached data (InMemoryRelation) and
+    registers no new persisted RDD; a planted ``documents`` view is a
+    different plan and gets its own answer."""
     from pyanamo_spark import semantics
-    from pyanamo_spark.dedup import _NGRAM_INDEX, ngram_index
 
+    q = QUERIES["q_dedup_ngram"]
     semantics.ensure_views(spark, sf_dir)
-    idx1 = ngram_index(spark, sf_dir)
-    assert ngram_index(spark, sf_dir) is idx1  # cache hit
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _NGRAM_INDEX
-
-    # sentinel sf_dir: never cached, never evicts the real entry.
-    # The conf marker must move with the replaced view, or a later
-    # ensure_views(sf_dir) would skip re-registering and every
-    # subsequent test would silently run on this 1-row corpus.
-    spark.createDataFrame(
-        [(1, "a b c d e", "en")], "doc_id long, text string, lang string"
-    ).createOrReplaceTempView("documents")
-    spark.conf.set("pyanamo_spark.views.sf_dir", "planted-sentinel")
-    adhoc = ngram_index(spark, "planted-sentinel")
-    assert adhoc is not ngram_index(spark, "planted-sentinel")
-    assert key in _NGRAM_INDEX and _NGRAM_INDEX[key] is idx1
-
-    # a second real corpus evicts (and unpersists) the first
-    other = str(tmp_path / "corpus2")
-    import os
-
-    os.makedirs(other)
-    semantics.ensure_views(spark, sf_dir)  # restore real views
-    idx2 = ngram_index(spark, other)
-    assert (spark.sparkContext.applicationId, other) in _NGRAM_INDEX
-    assert key not in _NGRAM_INDEX
-    # the NEW index is cached; eviction ran BEFORE persist, so even a
-    # plan-identical old entry (same underlying view, as here) cannot
-    # have cancelled it (idx1's storageLevel may still READ as cached
-    # for exactly that plan-identity reason — only idx2's matters)
-    assert idx2.prepped.storageLevel.useMemory
-    assert idx2.prefix_pool.storageLevel.useMemory
-    # leave the real-corpus index in place for other tests
-    _NGRAM_INDEX.clear()
-    ngram_index(spark, sf_dir)
-
-
-def test_verified_pairs_memoized_on_shared_index(spark, sf_dir):
-    """The family computes candidates+verify ONCE per cacheable
-    corpus: q_dedup_ngram memoizes its verified pair frame on the
-    shared index and q_dedup_clusters consumes the same frame — a
-    second ngram call returns the memoized object, not a new plan."""
-    from pyanamo_spark.dedup import _NGRAM_INDEX, ngram_index
-    from pyanamo_spark.registry import QUERIES
-
-    _NGRAM_INDEX.clear()
-    first = QUERIES["q_dedup_ngram"](spark, sf_dir)
-    idx = ngram_index(spark, sf_dir)
-    assert idx.ngram_pairs is first
-    assert first.storageLevel.useMemory
-    assert QUERIES["q_dedup_ngram"](spark, sf_dir) is first
-    # non-directory sf_dirs (planted test corpora) must NOT memoize:
-    # a later planted corpus would otherwise read this corpus' pairs
-    assert ngram_index(spark, "").ngram_pairs is None
-
-
-def test_index_rebuilds_after_session_clearcache(spark, sf_dir):
-    """bench.py runs spark.catalog.clearCache() after every query: the
-    memoized index/pairs must detect the eviction and rebuild with a
-    fresh persist, not serve frames that silently recompute on every
-    action."""
-    from pyanamo_spark.dedup import _NGRAM_INDEX, ngram_index
-    from pyanamo_spark.registry import QUERIES
-
-    _NGRAM_INDEX.clear()
-    QUERIES["q_dedup_ngram"](spark, sf_dir)
-    idx_before = ngram_index(spark, sf_dir)
     spark.catalog.clearCache()
-    idx_after = ngram_index(spark, sf_dir)
-    assert idx_after is not idx_before
-    pairs = QUERIES["q_dedup_ngram"](spark, sf_dir)
-    assert pairs.storageLevel.useMemory
-    assert idx_after.prepped.storageLevel.useMemory
+    jsc = spark.sparkContext._jsc
+    try:
+        first = sorted(map(tuple, q(spark, sf_dir).collect()))
+        n_persisted = len(jsc.getPersistentRDDs())
+        again = q(spark, sf_dir)
+        plan = again._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" in plan
+        assert sorted(map(tuple, again.collect())) == first
+        assert len(jsc.getPersistentRDDs()) == n_persisted
+
+        # odd ids: corpus_with_mutants plants mutants at doc_id % 100
+        # == 0; doc 3 is doc 1 plus one word (8 of 9 trigrams shared)
+        text = "a b c d e f g h i j"
+        spark.createDataFrame(
+            [(1, text, "en"), (3, text + " k", "en"),
+             (5, "p q r s t u v w", "en")],
+            "doc_id long, text string, lang string",
+        ).createOrReplaceTempView("documents")
+        spark.conf.set("pyanamo_spark.views.sf_dir", "planted")
+        planted = q.__wrapped__(spark, "planted").collect()
+        assert [tuple(r) for r in planted] == [(1, 3, round(8 / 9, 6))]
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_minhash_mega_bucket_routes_through_skew_join(spark):
@@ -339,36 +293,6 @@ def test_minhash_mega_bucket_routes_through_skew_join(spark):
     }
     want = {(a, b) for a in range(n) for b in range(n) if a < b}
     assert got == want  # all k(k-1)/2 identical-doc pairs, nothing else
-
-
-def test_mutant_candidate_cache_semantics(spark, sf_dir):
-    """The shared mutant-corpus LSH candidate table caches per
-    (app, sf_dir) for real fixture dirs (q_dedup_near and
-    q_contrastive_pairs consume one pipeline run), bypasses the cache
-    for sentinel sf_dirs, and rebuilds after a session clearCache
-    unpersists the memoized frame."""
-    from pyanamo_spark import semantics
-    from pyanamo_spark.dedup.minhash import (
-        _MUTANT_CANDIDATES,
-        mutant_candidate_pairs,
-    )
-
-    semantics.ensure_views(spark, sf_dir)
-    p1 = mutant_candidate_pairs(spark, sf_dir)
-    assert mutant_candidate_pairs(spark, sf_dir) is p1  # cache hit
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _MUTANT_CANDIDATES
-    # sentinel dirs never cache and never evict the real entry
-    adhoc = mutant_candidate_pairs(spark, "planted-sentinel")
-    assert adhoc is not p1
-    assert _MUTANT_CANDIDATES[key] is p1
-    # clearCache eviction: the memo must detect the lost storage and
-    # rebuild rather than serve a silently-recomputing frame
-    spark.catalog.clearCache()
-    p2 = mutant_candidate_pairs(spark, sf_dir)
-    assert p2 is not p1
-    lvl = p2.storageLevel
-    assert lvl.useMemory or lvl.useDisk
 
 
 def test_embed_float32_candidates_superset_of_float64(spark):
@@ -433,7 +357,7 @@ def test_ngram_mega_bucket_routes_through_skew_join(spark, planted_views):
         rows, ["doc_id", "text", "lang"]
     ).createOrReplaceTempView("documents")
     try:
-        idx = ngram_index(spark, "ngram-mega-sentinel")
+        idx = ngram_index(spark)
         got = {
             (r.doc_a, r.doc_b)
             for r in verified_ngram_pairs(idx).collect()

@@ -38,7 +38,7 @@ def test_lsh_selfmatch_and_subset_of_bucket(spark, sf_dir):
     from pyanamo_spark.similarity.knn import lsh_topk
 
     _ensure(spark, sf_dir)
-    rows = lsh_topk(spark, sf_dir).collect()
+    rows = lsh_topk(spark).collect()
     by_query = {}
     for r in rows:
         by_query.setdefault(r.query_id, []).append(r)
@@ -171,8 +171,8 @@ def test_lsh_deterministic(spark, sf_dir):
     from pyanamo_spark.similarity.knn import lsh_topk
 
     _ensure(spark, sf_dir)
-    a = sorted(map(tuple, lsh_topk(spark, sf_dir).collect()))
-    b = sorted(map(tuple, lsh_topk(spark, sf_dir).collect()))
+    a = sorted(map(tuple, lsh_topk(spark).collect()))
+    b = sorted(map(tuple, lsh_topk(spark).collect()))
     assert a == b
 
 
@@ -297,32 +297,29 @@ def test_append_to_index_matches_one_shot_build(spark, sf_dir, tmp_path):
 
 
 def test_embedding_dim_probe_never_caches_adhoc_views(spark, sf_dir):
-    """The dim memo must follow the ngram-index rule: only real
-    on-disk corpora are cacheable, and an empty probe is never
-    pinned. A cached dim=1 for a later-populated temp view would
-    size the LSH planes wrong — every zip_with dot nulls out and
-    all rows silently collapse into bucket 0 (full-scan LSH)."""
+    """The dim probe reads the view it is given on every call: an
+    empty view sizes to 1, and the same view once filled sizes from
+    its rows. A stale dim=1 for a later-populated view would size the
+    LSH planes wrong — every zip_with dot nulls out and all rows
+    silently collapse into bucket 0 (full-scan LSH)."""
     from pyanamo_spark import semantics
-    from pyanamo_spark.similarity.knn import _DIM_CACHE, _embedding_dim
+    from pyanamo_spark.similarity.knn import _embedding_dim
 
-    real_dim = _embedding_dim(spark, sf_dir)
-    assert real_dim > 1
     empty = spark.createDataFrame(
         [], "vec_id long, label string, embedding array<double>"
     )
     try:
         empty.createOrReplaceTempView("embeddings")
-        assert _embedding_dim(spark, "") == 1
-        app = spark.sparkContext.applicationId
-        assert (app, "") not in _DIM_CACHE  # ad-hoc key never memoized
+        assert _embedding_dim(spark) == 1
         # once the same view fills up, the probe sees the real data
         spark.createDataFrame(
             [(0, "a", [0.0] * 7)], "vec_id long, label string, embedding array<double>"
         ).createOrReplaceTempView("embeddings")
-        assert _embedding_dim(spark, "") == 7
+        assert _embedding_dim(spark) == 7
     finally:
+        spark.conf.unset(semantics._VIEWS_CONF_KEY)
         semantics.ensure_views(spark, sf_dir)
-    assert _embedding_dim(spark, sf_dir) == real_dim
+    assert _embedding_dim(spark) > 7  # the real view is back
 
 
 def test_rebuild_index_fires_on_imbalance_and_swaps_atomically(
