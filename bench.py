@@ -3,13 +3,14 @@
 JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``value`` is the sum over queries of each query's best-of-3 wall-clock
-(each executed to completion with a cheap count-style sink so results
-materialize but don't transfer to the driver). Best-of-3 because this
-host's timings swing 20-40% run-to-run (shared VM): the min of three
-runs measures the query's actual cost, not the noise floor — best-of-2
-still let load spikes masquerade as 1.3-1.7x per-query regressions in
-the r04 review.
+``value`` is the sum over queries of each query's best-of-3 wall-clock,
+timed by ``pyanamo_spark.measure.best_of`` (noop sink, clearCache after
+every rep). Best-of-3 because this host's timings swing 20-40%
+run-to-run (shared VM): the min of three runs measures the query's
+actual cost, not the noise floor — best-of-2 still let load spikes
+masquerade as 1.3-1.7x per-query regressions in the r04 review. The
+full record goes to BENCH_full.json; ``errors`` holds queries with no
+successful rep and ``rep_errors`` the count of raising reps.
 """
 
 from __future__ import annotations
@@ -17,12 +18,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(_REPO))
 
+from pyanamo_spark.measure import best_of, scale_factor
 from pyanamo_spark.registry import QUERIES, load_all
 from pyanamo_spark.session import get_spark
 
@@ -57,47 +58,12 @@ _SUMMARY_BUDGET = 1900
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    sf = scale_factor(sf_dir)
     load_all()
     spark = get_spark("pyanamo-spark-bench")
-
-    # warm the JVM + parquet footers once, outside the timed pass
-    warm = QUERIES["q_state_counts"](spark, sf_dir)
-    warm.collect()
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    rep_errors: dict[str, int] = {}
-    for _pass in range(3):
-        for name in sorted(QUERIES):
-            t0 = time.perf_counter()
-            try:
-                df = QUERIES[name](spark, sf_dir)
-                # materialize every row without shipping them to the
-                # driver
-                df.write.format("noop").mode("overwrite").save()
-            except Exception as exc:  # noqa: BLE001 — one rep may hit
-                # a transient executor fault (e.g. the Spark 4.1.2
-                # "SparkPlan.session() is null" NPE observed once on a
-                # cached-plan re-execution); the other passes still
-                # time the query, and a query missing from `timings`
-                # after all 3 passes surfaces in `errors` instead of
-                # crashing the whole per-round record
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                rep_errors[name] = rep_errors.get(name, 0) + 1
-                spark.catalog.clearCache()
-                continue
-            dt = round(time.perf_counter() - t0, 4)
-            timings[name] = min(timings.get(name, dt), dt)
-            # queries may persist() intermediates (dedup self-joins);
-            # drop them so one query's cache doesn't occupy executor
-            # storage for the rest of the suite
-            spark.catalog.clearCache()
-    # `errors` keeps only queries with NO surviving rep (the hard
-    # failures); `rep_errors` records every per-rep fault count, so a
-    # query that fails cold but succeeds warm is still visible in the
-    # artifact instead of recording a silently clean timing (ADVICE r10)
-    errors = {n: e for n, e in errors.items() if n not in timings}
+    run = best_of(spark, sf_dir, sorted(QUERIES), reps=3)
+    timings = {n: round(t, 4) for n, t in run.best.items()}
+    errors, rep_errors = run.errors, run.rep_errors
 
     total = round(sum(timings.values()), 4)
     full = {

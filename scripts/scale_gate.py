@@ -8,22 +8,24 @@ sf0.1 and fails loudly when one exceeds its budget.
 
 Budgets are ~3x the healthy best-of-2 timings on local[16] — loose
 enough to absorb machine noise, tight enough that an accidental
-per-row fallback (10-100x) trips immediately.
+per-row fallback (10-100x) trips immediately. A query whose every rep
+raises fails the gate too.
 
 Run: python scripts/scale_gate.py        (exit 0 = pass, 1 = regression)
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SCALE_GATE_FACTOR.
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyanamo_spark.registry import QUERIES, load_all
+from pyanamo_spark.measure import best_of
+from pyanamo_spark.registry import load_all
 from pyanamo_spark.session import get_spark
 
 #: seconds at sf0.1 on local[16], best of 2 — the UDF-bearing set
@@ -52,27 +54,20 @@ BUDGETS: dict[str, float] = {
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    factor = float(os.environ.get("SCALE_GATE_FACTOR", "1.0"))
     load_all()
     spark = get_spark("pyanamo-spark-scale-gate")
-    QUERIES["q_state_counts"](spark, sf_dir).collect()  # warm JVM
-    failures = []
+    try:
+        run = best_of(spark, sf_dir, BUDGETS, reps=2)
+    finally:
+        spark.stop()
+    best = run.best
+    failures = [n for n, budget in BUDGETS.items() if best.get(n, math.inf) > budget]
     for name, budget in BUDGETS.items():
-        best = None
-        for _ in range(2):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        limit = budget * factor
-        status = "OK " if best <= limit else "FAIL"
-        print(f"[{status}] {name:24s} {best:6.2f}s (budget {limit:.1f}s)")
-        if best > limit:
-            failures.append(name)
-    spark.stop()
+        took = f"{best[name]:6.2f}s" if name in best else f"raised: {run.errors[name]}"
+        status = "FAIL" if name in failures else "OK "
+        print(f"[{status}] {name:24s} {took} (budget {budget:.1f}s)")
+    if run.rep_errors:
+        print(f"raising reps: {run.rep_errors}")
     _print_suite_ratio()
     if failures:
         print(f"scale gate FAILED: {', '.join(failures)}")
@@ -92,11 +87,8 @@ def _print_suite_ratio() -> None:
     import json
 
     repo = Path(__file__).resolve().parent.parent
-    base_path = repo / "BASELINE_QUERIES.json"
-    if not base_path.exists():  # pre-freeze checkouts
-        base_path = repo / "BASELINE_QUERIES_r01.json"
     try:
-        base = json.loads(base_path.read_text())
+        base = json.loads((repo / "BASELINE_QUERIES.json").read_text())
         cur = json.loads((repo / "BENCH_full.json").read_text())
     except OSError:
         print("[ratio] skipped: baseline or BENCH_full.json missing")

@@ -1,40 +1,43 @@
-"""Time a subset of declared queries in isolation (clearCache between),
-for iterating on the slow tail: python scripts/time_queries.py q_a q_b ...
-Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS, N_REPS."""
+"""Time declared queries in isolation, for iterating on the slow tail.
+
+Each query is timed best-of-N by ``pyanamo_spark.measure.best_of``
+(noop sink, clearCache after every rep); one line per query gives the
+best rep and every rep.
+
+Run: python scripts/time_queries.py [q_a q_b ...]   (default: every query)
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS, N_REPS (default 2).
+"""
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyanamo_spark.measure import best_of
 from pyanamo_spark.registry import QUERIES, load_all
 from pyanamo_spark.session import get_spark
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("N_REPS", "2"))
     load_all()
-    spark = get_spark("pyanamo-spark-timeq")
     names = sys.argv[1:] or sorted(QUERIES)
-    QUERIES["q_state_counts"](spark, sf_dir).collect()  # warm JVM
+    spark = get_spark("pyanamo-spark-timeq")
+    try:
+        run = best_of(spark, sf_dir, names, reps)
+    finally:
+        spark.stop()
+    best = run.best
     for name in names:
-        best = None
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        print(f"{name:24s} {best:.3f}s")
-    spark.stop()
+        took = f"{best[name]:.3f}s" if name in best else run.errors[name]
+        reps_s = " ".join("err" if t is None else f"{t:.3f}" for t in run.times[name])
+        print(f"{name:24s} {took}  reps {reps_s}")
+    return 1 if run.errors else 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())
