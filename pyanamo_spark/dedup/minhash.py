@@ -16,7 +16,7 @@ Pipeline (the standard shingle → minhash → band → bucket-join shape):
 At 100 TB the band-bucket shuffle is the scale bottleneck; bucket
 sizes stay small because identical band hashes imply near-identical
 docs, and the pathological all-same-doc corpus routes through a
-skew-splittable self-join (MAX_COMBO_BUCKET valve).
+skew-splittable self-join (functions.skew.bucket_pairs).
 
 Oracle-checked via the planted-mutant audit (r09): DuckDB cannot
 replay the xxhash64 signatures, but it CAN recompute the exact
@@ -40,6 +40,7 @@ from pyanamo_spark.dedup import (
     corpus_with_mutants,
     shingles,
 )
+from pyanamo_spark.functions.skew import bucket_pairs
 from pyanamo_spark.registry import register
 
 N_PERM = 32
@@ -91,36 +92,17 @@ def band_structs(sig_col):
     )
 
 
-#: buckets at most this big emit their pairs with an in-task
-#: combinations explode; larger ones fall back to the skew-splittable
-#: self-join path (see candidate_pairs)
-MAX_COMBO_BUCKET = 256
-
-
 def candidate_pairs(spark: SparkSession, corpus: DataFrame) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one band bucket.
 
     Pair emission is grouped, not self-joined: the (doc_id, band)
     rows — 20 bytes each, never any text — shuffle ONCE into their
-    band bucket, and each bucket emits its id combinations with an
-    in-task array explode. The old a/b self-join shuffled the band
-    table twice and probed a 3.2M-row hash relation; at sf1 the
-    grouped form measured 5.9 s -> 3.6 s best-of-3 (r09; ~2.9 s
-    without the always-planned skew-valve branch below — the 0.7 s is
-    the insurance premium), with the identical pair set by
-    construction. Shingle-hash arrays are
-    joined back onto the deduped pairs afterwards (two narrow hash
-    joins on doc_id), so the hottest shuffles never ship content.
+    band bucket, and each bucket emits its id combinations in-task.
+    Shingle-hash arrays are joined back onto the deduped pairs
+    afterwards (two narrow hash joins on doc_id), so the hottest
+    shuffles never ship content.
 
-    Skew valve: a bucket's pair count is quadratic in its size, and
-    the grouped explode emits a bucket on ONE task. Identical band
-    hashes imply near-identical docs, so buckets stay small on real
-    corpora — but a boilerplate mega-cluster (thousands of identical
-    docs) is realistic at crawl scale, and pinning its k^2/2 pairs to
-    one task is not. Buckets above MAX_COMBO_BUCKET are re-exploded
-    to rows and pair via the old self-join, whose skewed band key AQE
-    splits across tasks (spark.sql.adaptive.skewJoin). Both branches
-    read the persisted bucket table, so the signature pass runs once.
+    Skew valve: see ``functions.skew.bucket_pairs``.
 
     The corpus is prepped straight to *hashed* shingle sets (one
     xxhash64 per shingle string, then array_distinct on the longs): the
@@ -180,36 +162,11 @@ def candidate_pairs(spark: SparkSession, corpus: DataFrame) -> DataFrame:
         .filter(F.size("ids") > 1)
         .persist()
     )
-    # two-level explode: row per (doc, later-docs-slice), then a row
-    # per pair — peak memory per row is O(bucket), never the O(k^2)
-    # struct array a single flatten(transform(...)) would materialize
-    small = (
-        buckets.filter(F.size("ids") <= MAX_COMBO_BUCKET)
-        .select("ids", F.posexplode("ids").alias("i", "doc_a"))
-        .select(
-            "doc_a",
-            F.explode(F.expr("slice(ids, i + 2, size(ids))")).alias(
-                "doc_b"
-            ),
-        )
+    pair_ids = (
+        bucket_pairs(buckets, ["band_idx", "band_hash"], "ids")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
     )
-    over = buckets.filter(F.size("ids") > MAX_COMBO_BUCKET).select(
-        "band_idx", "band_hash", F.explode("ids").alias("doc_id")
-    )
-    big = (
-        over.alias("a")
-        .join(
-            over.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-    )
-    pair_ids = small.unionByName(big).dropDuplicates(["doc_a", "doc_b"])
     sh_a = prepped.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("sh_a")
     )

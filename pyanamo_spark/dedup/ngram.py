@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyanamo_spark.dedup import CORPUS_SQL
+from pyanamo_spark.functions.skew import bucket_pairs
 from pyanamo_spark.registry import register
 
 THRESHOLD = 0.6
@@ -140,25 +141,13 @@ def verified_ngram_pairs(idx) -> DataFrame:
     # prefix length |A| - ceil(t|A|) + 1; the per-doc window shuffle is
     # doc-length-bounded (SortExec spills on pathological docs)
     prefix = idx.prefix(THRESHOLD)
-    # grouped bucket pair-emission (the minhash.candidate_pairs pattern,
-    # r10): the prefix postings shuffle ONCE into their (h, lang,
-    # size_bucket) bucket as (doc_id, n_sh) structs — never any text —
-    # and each bucket emits its combinations with an in-task two-level
-    # explode. The previous a/b prefix self-join shuffled the posting
-    # table TWICE and probed a postings-sized hash relation; recall is
-    # untouched (every pair the join produced shares a bucket, and the
-    # in-task emission enumerates exactly the same combinations). The
-    # size-ratio prune (jaccard ≥ t ⟹ min(|A|,|B|) ≥ t·max(|A|,|B|))
-    # now runs in-task on the carried n_sh, BEFORE the dedup exchange.
-    #
-    # Skew valve: a bucket's pair count is quadratic in its size and
-    # the grouped explode pins a bucket to one task. df-ranked prefixes
-    # keep buckets small on real corpora, but a boilerplate shingle
-    # rare enough to sit in thousands of prefixes is realistic at crawl
-    # scale; buckets above MAX_COMBO_BUCKET re-explode to rows and pair
-    # via the old self-join, whose skewed key AQE splits across tasks.
-    from pyanamo_spark.dedup.minhash import MAX_COMBO_BUCKET
-
+    # grouped bucket pair-emission: the prefix postings shuffle ONCE
+    # into their (h, lang, size_bucket) bucket as (doc_id, n_sh)
+    # structs — never any text — and each bucket emits its
+    # combinations in-task (recall is untouched: every pair sharing a
+    # prefix shingle shares a bucket). The size-ratio prune (jaccard ≥
+    # t ⟹ min(|A|,|B|) ≥ t·max(|A|,|B|)) runs on the carried n_sh,
+    # BEFORE the dedup exchange. Skew valve: see skew.bucket_pairs.
     buckets = (
         prefix.groupBy("h", "lang", "size_bucket")
         .agg(
@@ -203,14 +192,8 @@ def verified_ngram_pairs(idx) -> DataFrame:
     pos_ok = F.lit(_t.numerator + _t.denominator) * pos_lhs >= F.lit(
         _t.numerator
     ) * (F.col("a.n_sh") + F.col("b.n_sh"))
-    # struct sort is by doc_id first, so slicing past position i yields
-    # strictly larger doc_ids: doc_a < doc_b by construction. (A
-    # size-sorted emission applying the asymmetric index-prefix filter
-    # between the explodes was tried in r11 and measured WORSE — 51.8s
-    # vs 31.1s at sf10: the per-occurrence re-orientation whens and the
-    # extra filter in the generate pipeline cost more than the skipped
-    # slices saved; the strict per-pair bound below already removes
-    # those pairs before the expensive verification.)
+    # struct sort is by doc_id first and doc_ids are distinct within a
+    # bucket, so a < b orders the pair by doc_id: doc_a < doc_b.
     # occurrences ship SLIM (r12): (doc_a, doc_b, packed (ra, rb)) —
     # 24 B/row through the dedup exchange instead of the 64 B struct
     # with the four per-doc constants, which re-attach after the agg
@@ -220,52 +203,6 @@ def verified_ngram_pairs(idx) -> DataFrame:
     # rnk < 2^31 would need a single document with two billion
     # distinct shingles
     pk = F.col("a.rnk") * F.lit(1 << 31) + F.col("b.rnk")
-    small = (
-        buckets.filter(F.size("ms") <= MAX_COMBO_BUCKET)
-        .select("ms", F.posexplode("ms").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(F.expr("slice(ms, i + 2, size(ms))")).alias("b"),
-        )
-        .filter(ratio_ok & pos_ok)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            pk.alias("pk"),
-        )
-    )
-    over = buckets.filter(F.size("ms") > MAX_COMBO_BUCKET).select(
-        "h",
-        "lang",
-        "size_bucket",
-        F.explode("ms").alias("m"),
-    )
-    big = (
-        over.alias("ea")
-        .select(
-            "h",
-            "lang",
-            "size_bucket",
-            F.col("m").alias("a"),
-        )
-        .join(
-            over.alias("eb").select(
-                "h",
-                "lang",
-                "size_bucket",
-                F.col("m").alias("b"),
-            ),
-            ["h", "lang", "size_bucket"],
-        )
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id")) & ratio_ok & pos_ok
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            pk.alias("pk"),
-        )
-    )
     # pair dedup upgraded to the STRICT PPJoin bound at no extra
     # shuffle: the same hash aggregation that deduplicated pairs now
     # keeps each pair's (min ra, min rb) occurrence — common elements
@@ -280,7 +217,15 @@ def verified_ngram_pairs(idx) -> DataFrame:
     # tight one) and the lexicographic struct-min selects exactly s*,
     # whose tight bound >= |A∩B| >= the required overlap. na/nb/n2
     # ride in the struct tail (constant per pair, past the rnk keys).
-    occ = small.unionByName(big)
+    occ = (
+        bucket_pairs(buckets, ["h", "lang", "size_bucket"], "ms")
+        .filter(ratio_ok & pos_ok)
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            pk.alias("pk"),
+        )
+    )
     # min over the packed long IS the lexicographic (ra, rb) min the
     # old struct-min computed: the dropped fields were constant per
     # (doc_a, doc_b) and never broke a tie

@@ -41,6 +41,7 @@ from pyanamo_spark.dedup import (
     MUTANT_SUFFIX,
     corpus_with_mutants,
 )
+from pyanamo_spark.functions.skew import bucket_pairs
 from pyanamo_spark.registry import register
 from pyanamo_spark.session import spread
 
@@ -620,17 +621,12 @@ def simhash_pairs(
     else:
         # large-corpus regime: grouped bucket emission (the
         # minhash/ngram family pattern) — keyed rows shuffle ONCE into
-        # their (pair_idx, key_val) bucket and each bucket emits its
-        # sig combinations with an in-task two-level explode. The
-        # self-join here built per-task hash relations over the whole
-        # keyed table (53M rows at sf10 under the triple scheme) and
-        # OOM'd the 8 GB local JVM; the grouped form's peak memory is
-        # one bucket's sig array, and the same-window sf10 A/B read
-        # 157.7 s (r10 pair join) vs 76.0 s. Buckets above
-        # MAX_COMBO_BUCKET fall back to the AQE-skew-splittable
-        # self-join, exactly as in the siblings.
-        from pyanamo_spark.dedup.minhash import MAX_COMBO_BUCKET
-
+        # their (pair_idx, key_val) bucket and each bucket emits its sig
+        # combinations in-task. A keyed self-join here builds per-task
+        # hash relations over the whole keyed table (53M rows at sf10
+        # under the triple scheme) and OOMs an 8 GB local JVM; the
+        # grouped form's peak memory is one bucket's sig array. Skew
+        # valve: see skew.bucket_pairs.
         buckets = (
             blocked.groupBy("pair_idx", "key_val")
             .agg(F.array_sort(F.collect_list("sig")).alias("ms"))
@@ -647,33 +643,9 @@ def simhash_pairs(
         # sibling pair persists.
         buckets = buckets.persist()
         buckets.count()
-        small = (
-            buckets.filter(F.size("ms") <= MAX_COMBO_BUCKET)
-            .select("ms", F.posexplode("ms").alias("i", "sig_a"))
-            .select(
-                "sig_a",
-                F.explode(F.expr("slice(ms, i + 2, size(ms))")).alias(
-                    "sig_b"
-                ),
-            )
-        )
-        over = buckets.filter(F.size("ms") > MAX_COMBO_BUCKET).select(
-            "pair_idx", "key_val", F.explode("ms").alias("sig")
-        )
-        big = (
-            over.alias("a")
-            .join(
-                over.alias("b"),
-                (F.col("a.pair_idx") == F.col("b.pair_idx"))
-                & (F.col("a.key_val") == F.col("b.key_val"))
-                & (F.col("a.sig") < F.col("b.sig")),
-            )
-            .select(
-                F.col("a.sig").alias("sig_a"),
-                F.col("b.sig").alias("sig_b"),
-            )
-        )
-        raw_pairs = small.unionByName(big)
+        raw_pairs = bucket_pairs(
+            buckets, ["pair_idx", "key_val"], "ms"
+        ).select(F.col("a").alias("sig_a"), F.col("b").alias("sig_b"))
     sig_pairs = (
         raw_pairs.withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= HAMMING_MAX)

@@ -12,12 +12,19 @@ two-stage rewrite:
 
 Only algebraic aggregates compose this way (count/sum/min/max —
 anything with a merge function); avg is sum/count at the call site.
+
+``bucket_pairs`` is the pair-emission step of the dedup family: every
+pair inside a bucket, without pinning a mega-bucket to one task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: buckets with at most this many items emit their pairs in-task;
+#: larger ones pair through the skew-splittable self-join
+MAX_COMBO_BUCKET = 256
 
 #: aggregate name → (stage-1 fn, stage-2 combiner)
 _MERGEABLE = {
@@ -82,3 +89,44 @@ def salted_join(
         "_salt", F.explode(F.lit(list(range(n_salts))))
     )
     return salted_fact.join(salted_dim, [key, "_salt"]).drop("_salt")
+
+
+def bucket_pairs(buckets: DataFrame, keys: list[str], items: str) -> DataFrame:
+    """``(a, b)`` for every pair ``a < b`` of each bucket's ``items``.
+
+    ``buckets`` holds one row per bucket: its ``keys`` columns and
+    ``items``, a sorted array of distinct elements. Buckets with a NULL
+    key pair nothing, as in an SQL equi-join on the keys.
+
+    A bucket's pair count is quadratic in its size. Buckets of at most
+    ``MAX_COMBO_BUCKET`` items emit their pairs in-task with a
+    two-level explode: one row per (item, later-items slice), then one
+    row per pair, so a row is never wider than the bucket (a flattened
+    combinations array would be O(k^2) per row). That pins a bucket to
+    one task, which a boilerplate mega-cluster at crawl scale would
+    overload; larger buckets are therefore re-exploded to rows and
+    self-joined on ``keys``, a join whose skewed key AQE splits across
+    tasks (spark.sql.adaptive.skewJoin). ``buckets`` feeds both
+    branches, so callers persist it when it is costly to recompute.
+    """
+    keyed = buckets.dropna(subset=keys)
+    small = (
+        keyed.filter(F.size(items) <= MAX_COMBO_BUCKET)
+        .select(items, F.posexplode(items).alias("_i", "a"))
+        .select(
+            "a",
+            F.explode(
+                F.slice(items, F.col("_i") + 2, F.size(items))
+            ).alias("b"),
+        )
+    )
+    rows = keyed.filter(F.size(items) > MAX_COMBO_BUCKET).select(
+        *keys, F.explode(items).alias("_item")
+    )
+    big = (
+        rows.withColumnRenamed("_item", "a")
+        .join(rows.withColumnRenamed("_item", "b"), keys)
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+    return small.unionByName(big)

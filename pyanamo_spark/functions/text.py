@@ -827,18 +827,14 @@ def q_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") >= PMI_MIN_DF)
     )
     kept = words.join(F.broadcast(df_.select("w")), "w", "semi")
-    # grouped pair emission (r12): the old a/b self-join shuffled the
-    # kept postings TWICE by doc_id (kept's distinct partitions on
-    # (doc_id, w), so neither join input reuses it) and probed a hash
-    # relation per pair; grouping each doc's frequent words into one
-    # sorted array and exploding the in-task combinations emits the
-    # identical (wa < wb) pair multiset after ONE doc_id shuffle — the
-    # r09 minhash bucket-emission pattern. Per-doc fan-out is bounded
-    # by |frequent vocab ∩ doc| (the PMI_MIN_DF prune), so no task
-    # holds more than a doc-sized quadratic — the same bound the
-    # self-join's skew-split relied on. The two-level explode keeps
-    # peak row width O(doc), never the O(k²) a flattened combination
-    # array would materialize.
+    # grouped pair emission: each doc's frequent words collapse into
+    # one sorted array after ONE doc_id shuffle, and the in-task
+    # two-level explode emits the (wa < wb) pair multiset with peak
+    # row width O(doc). No skew valve (functions.skew.bucket_pairs):
+    # a doc's fan-out is bounded by |frequent vocab ∩ doc| (the
+    # PMI_MIN_DF prune), and routing it through the helper cost two
+    # extra jobs, 12 -> 20 exchanges and 0.46 -> 0.56 s best-of-3 at
+    # sf0.1 on 4 cores.
     pair_df = (
         kept.groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("w")).alias("ws"))

@@ -94,11 +94,14 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # directed (antecedent, consequent) counts are symmetric, so the
     # pair aggregation carries half the rows and both orientations are
     # expanded from the counted table afterwards. Identical output by
-    # construction; per-task fan-out stays Σ basket² with the same
-    # largest-basket bound the join relied on. baskets feeds three
-    # consumers but its identical exchange canonicalizes once
-    # (runtime ReuseExchange — the r08 items-checkpoint experiment's
-    # lesson still applies).
+    # construction; per-task fan-out is Σ basket², bounded by the
+    # largest basket, so there is no skew valve here
+    # (functions.skew.bucket_pairs): routing this emission through the
+    # helper cost two extra jobs, 0.79 -> 1.52 s best-of-3 at sf0.1 on
+    # 4 cores, and 16 -> 20 exchanges against an audit budget of 18.
+    # baskets feeds three consumers but its identical exchange
+    # canonicalizes once (runtime ReuseExchange — the r08
+    # items-checkpoint experiment's lesson still applies).
     baskets = (
         spark.table("lineitem")
         .groupBy("l_orderkey")

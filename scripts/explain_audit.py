@@ -182,13 +182,13 @@ EXCHANGE_BUDGET = {
     "q_time_split": 12,  # identical percentile accounting for the
     # 1-row date cutoff; the labeled readout is one aggregation over
     # the scan
-    "q_basket_rules": 18,  # the distinct-items subtree is PRINTED
-    # four times (both self-join sides + both support legs) — copies
-    # canonicalize so ReuseExchange dedups at runtime. Live profile:
-    # item distinct, the basket-keyed pair self-join (cost Σ basket²,
-    # never catalog²), the pair-vocab count aggregate, two ITEM-sized
-    # support joins (AQE broadcasts), a 1-row basket total, and the
-    # TakeOrdered top-k
+    "q_basket_rules": 18,  # the per-basket part-set aggregate is
+    # PRINTED three times (the pair emission + both support legs) —
+    # copies canonicalize so ReuseExchange dedups at runtime. Live
+    # profile: the orderkey part-set aggregate, the in-task pair
+    # explode (cost Σ basket², never catalog²), the pair-vocab count
+    # aggregate, two ITEM-sized support joins (AQE broadcasts), a
+    # 1-row basket total, and the TakeOrdered top-k
     "q_top_paths": 10,  # the assembled-paths subtree is PRINTED per
     # consumer (path counts + the 1-row total); live: the session
     # assembly aggregation, the PATH-VOCAB count aggregate, the
@@ -256,12 +256,12 @@ EXCHANGE_BUDGET = {
     # consumers (per-bucket totals, per-source windows, corpus total,
     # PSI fold) and each PRINTS its subtree; all post-scan frames are
     # grid-sized (tens of rows), the corpus is scanned once
-    "q_pmi": 24,  # the distinct-words and min-df subtrees are PRINTED
-    # once per consumer (df join back on both pair sides + the kept
-    # semi-join); copies canonicalize so ReuseExchange dedups at
-    # runtime. Live: distinct-words agg, df agg, the doc_id pair
-    # join, pair-count agg, and the top-k sort — every wide row is a
-    # (doc, frequent-word) pair or smaller
+    "q_pmi": 24,  # the min-df subtree is PRINTED once per consumer
+    # (df join back on both pair sides + the kept semi-join); copies
+    # canonicalize so ReuseExchange dedups at runtime. Live: df agg,
+    # the doc_id word-set agg with its in-task pair explode, pair-count
+    # agg, and the top-k sort — every wide row is a (doc,
+    # frequent-word) pair or smaller
     "q_global_ids": 12,  # r10 lazy global_rank_frame over the
     # lineitem scan: the rank subtree (range exchange + pid-count agg
     # + triangular offset join) is PRINTED per consumer — identical

@@ -4,7 +4,14 @@ mutant pairs, deterministically."""
 
 from __future__ import annotations
 
+from collections import Counter
+from unittest import mock
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
 from pyanamo_spark.dedup import MUTANT_OFFSET
+from pyanamo_spark.functions import skew
 from pyanamo_spark.registry import QUERIES, load_all
 
 load_all()
@@ -270,10 +277,10 @@ def test_minhash_mega_bucket_routes_through_skew_join(spark):
     buckets skip the in-task combinations explode and pair via the
     skew-splittable self-join branch instead."""
     from pyanamo_spark.dedup.minhash import (
-        MAX_COMBO_BUCKET,
         candidate_pairs,
         JACCARD_THRESHOLD,
     )
+    from pyanamo_spark.functions.skew import MAX_COMBO_BUCKET
 
     n = MAX_COMBO_BUCKET + 44  # forces the big-bucket branch
     same = "the quick brown fox jumps over the lazy dog again and again"
@@ -293,6 +300,117 @@ def test_minhash_mega_bucket_routes_through_skew_join(spark):
     }
     want = {(a, b) for a in range(n) for b in range(n) if a < b}
     assert got == want  # all k(k-1)/2 identical-doc pairs, nothing else
+
+
+def test_ngram_null_lang_docs_pair_nothing(spark, planted_views):
+    """The oracle blocks on ``a.lang = b.lang``, which never holds for
+    a NULL lang: two identical NULL-lang docs are no pair, while the
+    same two docs with a lang are. bucket_pairs drops NULL-key buckets
+    on both of its branches, so the answer cannot depend on bucket
+    size."""
+    import duckdb
+
+    from pyanamo_spark.registry import ORACLES
+
+    text = "a b c d e f g h i j"
+    # odd ids: corpus_with_mutants plants mutants at doc_id % 100 == 0
+    rows = [
+        (1, text, None),
+        (3, text, None),
+        (5, text + " x", "en"),
+        (7, text + " x", "en"),
+        (9, "p q r s t u v w", "en"),
+    ]
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string"
+    ).createOrReplaceTempView("documents")
+    spark.conf.set("pyanamo_spark.views.sf_dir", "planted")
+    try:
+        got = sorted(
+            tuple(r)
+            for r in QUERIES["q_dedup_ngram"]
+            .__wrapped__(spark, "planted")
+            .collect()
+        )
+    finally:
+        spark.catalog.clearCache()
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE TABLE documents (doc_id BIGINT, text VARCHAR, lang VARCHAR)"
+    )
+    duck.executemany("INSERT INTO documents VALUES (?, ?, ?)", rows)
+    want = sorted(duck.execute(ORACLES["q_dedup_ngram"]).fetchall())
+    duck.close()
+    assert want == [(5, 7, 1.0)]
+    assert got == want
+
+
+_KEY = st.one_of(st.none(), st.integers(0, 2))
+
+
+@st.composite
+def _bucket_tables(draw):
+    """(n_keys, struct_items, rows): bucket rows of one or two key
+    columns (NULL keys included, one row per distinct key) and a
+    sorted array of 0-12 distinct longs or (doc_id, v) structs."""
+    n_keys = draw(st.integers(1, 2))
+    structs = draw(st.booleans())
+    keys = draw(
+        st.lists(st.tuples(*[_KEY] * n_keys), unique=True, max_size=5)
+    )
+    rows = []
+    for k in keys:
+        ids = sorted(draw(st.sets(st.integers(0, 40), max_size=12)))
+        items = [(i, draw(st.integers(0, 3))) for i in ids] if structs else ids
+        rows.append((*k, items))
+    return n_keys, structs, rows
+
+
+@settings(
+    max_examples=20,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(table=_bucket_tables(), cap=st.one_of(st.none(), st.integers(0, 12)))
+@example(
+    table=(
+        1,
+        False,
+        [
+            (0, list(range(skew.MAX_COMBO_BUCKET))),
+            (1, list(range(skew.MAX_COMBO_BUCKET + 1))),
+            (None, list(range(skew.MAX_COMBO_BUCKET + 1))),
+        ],
+    ),
+    cap=None,
+)
+def test_bucket_pairs_equals_the_naive_self_join(spark, table, cap):
+    """bucket_pairs emits exactly the multiset of the naive self-join
+    of the exploded items ON keys = keys AND a.item < b.item. ``cap``
+    lowers MAX_COMBO_BUCKET so generated buckets take either branch;
+    the explicit example sits on both sides of the real cap."""
+    from pyspark.sql import functions as F
+
+    n_keys, structs, rows = table
+    keys = ["k0", "k1"][:n_keys]
+    item_t = "struct<doc_id: bigint, v: bigint>" if structs else "bigint"
+    schema = "".join(f"{k} bigint, " for k in keys)
+    buckets = spark.createDataFrame(rows, f"{schema}items array<{item_t}>")
+    with mock.patch.object(
+        skew, "MAX_COMBO_BUCKET", skew.MAX_COMBO_BUCKET if cap is None else cap
+    ):
+        got = Counter(
+            map(tuple, skew.bucket_pairs(buckets, keys, "items").collect())
+        )
+    exploded = buckets.select(*keys, F.explode("items").alias("item"))
+    cond = F.col("a.item") < F.col("b.item")
+    for k in keys:
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    naive = exploded.alias("a").join(exploded.alias("b"), cond)
+    want = Counter(
+        map(tuple, naive.select("a.item", "b.item").collect())
+    )
+    assert got == want
 
 
 def test_embed_float32_candidates_superset_of_float64(spark):
@@ -341,8 +459,8 @@ def test_ngram_mega_bucket_routes_through_skew_join(spark, planted_views):
     AQE-splittable self-join branch and still yield EXACTLY the
     all-pairs set — completeness and precision, both branches."""
     from pyanamo_spark.dedup import ngram_index
-    from pyanamo_spark.dedup.minhash import MAX_COMBO_BUCKET
     from pyanamo_spark.dedup.ngram import verified_ngram_pairs
+    from pyanamo_spark.functions.skew import MAX_COMBO_BUCKET
 
     n = MAX_COMBO_BUCKET + 44  # forces the big-bucket branch
     same = "the quick brown fox jumps over the lazy dog again and again"
