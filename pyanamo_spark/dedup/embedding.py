@@ -220,6 +220,8 @@ def embed_candidates(emb: DataFrame) -> DataFrame:
 
     The per-label counts collect is bounded by LABEL CARDINALITY (the
     ivf.py centroid-collect precedent), not data size."""
+    # the oracle joins ON a.label = b.label: a NULL label pairs nothing
+    emb = emb.filter(F.col("label").isNotNull())
     counts = {
         r["label"]: r["n"]
         for r in emb.groupBy("label").agg(F.count("*").alias("n")).collect()

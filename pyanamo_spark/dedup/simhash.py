@@ -6,13 +6,12 @@ can't do cheaply); everything downstream is DataFrame ops:
 
   - identical signatures collapse before any pairing (duplicate mass
     multiplies blocking buckets quadratically otherwise)
-  - candidate blocking over DISTINCT signatures, block-key width
-    ADAPTIVE to the measured corpus: pairs of 9 blocks (≥2 agree
-    within radius 7) under the crossover, triples of 10 blocks (≥3
-    agree) above it — see the scheme comment. Detection within the
-    radius is
-    guaranteed, not probabilistic; pairs beyond it are out of scope
-    (the classic SimHash blocking trade)
+  - candidate blocking over DISTINCT signatures on combinations of
+    signature blocks: 4-of-11 in the broadcast numpy kernel up to
+    _BROADCAST_MAX distinct signatures, 3-of-10 in the grouped JVM
+    emission above it. Detection within the radius is guaranteed, not
+    probabilistic; pairs beyond it are out of scope (the classic
+    SimHash blocking trade)
   - verification: F.bit_count(a XOR b) ≤ HAMMING_MAX, JVM-side
 
 Token hashes use md5 (stable across workers/runs — never Python's
@@ -139,32 +138,12 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
     return _simhash_batch(texts)
 
 
-#: ADAPTIVE block scheme (r11). Two regimes drive candidate volume:
-#:   - structured matches: a true near-dup pair agreeing on m blocks
-#:     matches in C(m, r) buckets — multiplicity ×C(9,2)=36 for pair
-#:     keys, ×C(10,3)=120 for triple keys. Dominates DENSE corpora.
-#:   - random collisions: ~keys · n²/2^(key bits) for n distinct
-#:     signatures — ~n²/910 for 14-bit pair keys, negligible for
-#:     ~20-bit triple keys. Dominates LARGE corpora.
-#: Neither key width wins both (measured, sf1 vs sf10: pairs 5.7 s /
-#: 137 s, triples 12.6 s / 13.7 s), so the scheme picks by the
-#: measured distinct-signature count: pair keys below the crossover,
-#: triple keys above. Both carry the identical pigeonhole guarantee
-#: at radius 7 — ≤7 differing bits touch ≤7 blocks, leaving ≥2 of 9
-#: (pairs) or ≥3 of 10 (triples) agreeing — so detection inside the
-#: radius is guaranteed under either. A first-agreeing-key emission
-#: filter was also tried and reverted: it cuts the dedup exchange but
-#: pays ~15 extra ops on every MATCHED row, and the match enumeration
-#: itself, not the exchange, is the cost (sf1 5.7→8.3 s).
-#: Evolution: r05's single-block scheme (8 keys × 256 values) grew
-#: candidates quadratically — 98× cost at 10× data.
-_PAIR_BLOCKS = 9
+#: grouped JVM scheme: the 64 bits are dealt into 10 blocks and every
+#: 3-block combination is a key (C(10,3)=120). ≤7 differing bits touch
+#: ≤7 blocks and leave ≥3 of 10 agreeing, so every pair within
+#: HAMMING_MAX shares at least one key: detection inside the radius is
+#: guaranteed, not probabilistic.
 _TRIPLE_BLOCKS = 10
-#: distinct-signature crossover: above this, pair-key random
-#: collisions (~n²/910) swamp the ×120/×36 structured-multiplicity
-#: ratio at any plausible duplication rate; calibrated on the sf1
-#: (37k sigs → pairs) and sf10 (446k sigs → triples) fixtures
-_TRIPLE_SWITCH = 150_000
 
 #: broadcast-kernel regime (r12): below this many DISTINCT signatures
 #: the whole blocking problem is a ~16 MB-per-worker numpy job — the
@@ -182,7 +161,7 @@ _TRIPLE_SWITCH = 150_000
 _BROADCAST_MAX = 2_000_000
 #: the broadcast regime uses 4-subsets of 11 blocks: ≤7 differing bits
 #: touch ≤7 blocks, leaving ≥4 of 11 agreeing — same pigeonhole
-#: guarantee, chosen over (10,3)/(9,2) because measured on the sf10
+#: guarantee, chosen over (10,3) because measured on the sf10
 #: distinct sigs the candidate volume drops 2.829e9 → 1.701e9 (the
 #: ~21-bit 4-block keys collide less than ~19-bit triples) and the
 #: numpy kernel's cost is candidate-bound, not combo-bound (sorts are
@@ -191,26 +170,34 @@ _BCAST_BLOCKS = 11
 _BCAST_R = 4
 
 
-def _balanced_blocks(
-    distinct_sigs: DataFrame,
-    n_blocks: int | None = None,
-) -> tuple[list[list[int]], int]:
-    """Assign the 64 signature bits to blocks by measured balance,
-    returning (blocks, n_distinct) — the distinct count also picks the
-    block scheme (pair keys under _TRIPLE_SWITCH, triple keys above).
+def _deal(ones: list[int], n: int, n_blocks: int) -> list[list[int]]:
+    """Assign the 64 signature bits to ``n_blocks`` blocks by measured
+    balance, given each bit's count of ones over ``n`` distinct sigs.
 
     Real-corpus SimHash bits are wildly unequal: bits whose vote is
     dominated by the common vocabulary are near-constant across docs,
     and a block made of such bits agrees for a huge fraction of ALL
     pairs (the sf1 diagnosis measured 200 candidates per true pair
-    from exactly this). One 64-sum aggregate over the distinct
-    signatures measures each bit's 1-frequency; bits are ranked by
-    distance from 0.5 and dealt round-robin so every block carries
-    its share of the high-entropy bits. The pigeonhole guarantee is
-    untouched — any partition of the 64 bits into the scheme's block
-    count works — only bucket sizes change. Cost: a 64-number driver
-    model.
-    """
+    from exactly this). Bits are ranked by the distance of their
+    1-frequency from 0.5 (stable ties by bit index) and dealt
+    round-robin so every block carries its share of the high-entropy
+    bits. The pigeonhole guarantee is untouched — any partition of the
+    64 bits into the scheme's block count works — only bucket sizes
+    change."""
+    n = max(n, 1)
+    order = sorted(range(64), key=lambda b: abs(ones[b] / n - 0.5))
+    blocks: list[list[int]] = [[] for _ in range(n_blocks)]
+    for rank, bit in enumerate(order):
+        blocks[rank % n_blocks].append(bit)
+    return blocks
+
+
+def _balanced_blocks(
+    distinct_sigs: DataFrame, n_blocks: int
+) -> list[list[int]]:
+    """``_deal`` with the ones counted by one 64-sum JVM aggregate over
+    the distinct signatures, which are never collected. Cost: a
+    64-number driver model."""
     row = distinct_sigs.agg(
         F.count("*").alias("n"),
         *[
@@ -220,39 +207,20 @@ def _balanced_blocks(
             for b in range(64)
         ],
     ).first()
-    if n_blocks is None:
-        n_blocks = (
-            _PAIR_BLOCKS if row["n"] <= _TRIPLE_SWITCH else _TRIPLE_BLOCKS
-        )
-    n = max(row["n"], 1)
-    order = sorted(range(64), key=lambda b: abs((row[f"b{b}"] or 0) / n - 0.5))
-    blocks: list[list[int]] = [[] for _ in range(n_blocks)]
-    for rank, bit in enumerate(order):
-        blocks[rank % n_blocks].append(bit)
-    return blocks, row["n"]
+    return _deal([row[f"b{b}"] or 0 for b in range(64)], row["n"], n_blocks)
 
 
 def _balanced_blocks_np(sig_arr: np.ndarray, n_blocks: int) -> list[list[int]]:
-    """Driver-side twin of ``_balanced_blocks`` over the COLLECTED
-    distinct-sig array: identical ranking (bit 1-frequency distance
-    from 0.5, stable ties by bit index) and round-robin deal, computed
-    in numpy. The broadcast regime already holds the array on the
-    driver, so measuring balance there removes a whole Spark job whose
-    64 shift/mask sum expressions cost ~2 s of whole-stage-codegen
-    compile cold (and ~1 s warm) per query — pure fixed overhead at
-    every scale the regime serves (guide §1.2: don't compute things
-    twice; the JVM aggregate form stays for the >_BROADCAST_MAX path,
-    where the sigs are never collected)."""
+    """``_deal`` with the ones counted in numpy over the COLLECTED
+    distinct-sig array. The broadcast path already holds the array on
+    the driver, so counting there removes a whole Spark job whose 64
+    shift/mask sum expressions cost ~2 s of whole-stage-codegen compile
+    cold (and ~1 s warm) per query."""
     u = sig_arr.view(np.uint64)
-    n = max(len(u), 1)
-    cnt = [
+    ones = [
         int(((u >> np.uint64(b)) & np.uint64(1)).sum()) for b in range(64)
     ]
-    order = sorted(range(64), key=lambda b: abs(cnt[b] / n - 0.5))
-    blocks: list[list[int]] = [[] for _ in range(n_blocks)]
-    for rank, bit in enumerate(order):
-        blocks[rank % n_blocks].append(bit)
-    return blocks
+    return _deal(ones, len(u), n_blocks)
 
 
 def _block_value(sig_col: str, bits: list[int]):
@@ -268,22 +236,20 @@ def _block_value(sig_col: str, bits: list[int]):
 
 
 def _key_combos(n_blocks: int) -> list[tuple[int, ...]]:
-    """The block combinations in pair_idx order: (i, j) pairs for the
-    9-block scheme, (i, j, k) triples for the 10-block one, (i, j, k,
-    l) quads for the broadcast regime's 11-block one."""
+    """The block combinations in pair_idx order: (i, j, k) triples for
+    the grouped path's 10-block scheme, (i, j, k, l) quads for the
+    broadcast path's 11-block one."""
     from itertools import combinations
 
-    r = {_PAIR_BLOCKS: 2, _TRIPLE_BLOCKS: 3, _BCAST_BLOCKS: _BCAST_R}[
-        n_blocks
-    ]
+    r = {_TRIPLE_BLOCKS: 3, _BCAST_BLOCKS: _BCAST_R}[n_blocks]
     return list(combinations(range(n_blocks), r))
 
 
 def _with_pair_keys(sigs: DataFrame, sig_col: str, blocks: list[list[int]]):
     """Explode each signature into its (pair_idx, key_val) rows: one
-    per block combination — C(9,2)=36 pair keys or C(10,3)=120 triple
-    keys — with the member block values packed at 256-stride (blocks
-    carry ≤8 bits under either scheme).
+    per block combination — C(10,3)=120 triple keys — with the member
+    block values packed at 256-stride (a block carries ≤7 of the 64
+    bits).
 
     The block values are projected ONCE before the explode — the
     naive form embeds every block's full bit-gather expression inside
@@ -443,7 +409,7 @@ def _broadcast_sig_pairs(
     spark: SparkSession, sig_arr: np.ndarray, blocks: list[list[int]]
 ) -> DataFrame:
     """(sig_a, sig_b, hamming) for every distinct-signature pair within
-    HAMMING_MAX — the broadcast-kernel regime of the adaptive scheme.
+    HAMMING_MAX — the broadcast-kernel path.
 
     The distinct sigs (≤ _BROADCAST_MAX × 8 B) are collected once and
     torrent-broadcast; the C(11,4)=330 block-combination keys are
@@ -535,17 +501,15 @@ def simhash_pairs(
          Within-group pairs are emitted directly (hamming 0) by a
          sig-keyed self-join — output-sized work
       3. DISTINCT signatures block on combinations of signature
-         blocks, the scheme ADAPTIVE to the measured distinct count
-         (pigeonhole: ≤7 differing bits touch ≤7 blocks, so ≥2 of 9,
-         ≥3 of 10, or ≥4 of 11 blocks agree → some combination key
-         matches; detection within the radius stays guaranteed, not
-         probabilistic under every scheme). Bits are dealt to blocks
-         by measured balance (_balanced_blocks) so correlated
-         low-entropy bits can't produce giant buckets. Up to
-         _BROADCAST_MAX distinct sigs the pairing runs in the
-         broadcast numpy kernel (_broadcast_sig_pairs — no keyed-row
-         exchange at all); above it, the grouped JVM emission below
-         is the scale form
+         blocks (pigeonhole: ≤7 differing bits touch ≤7 blocks, so ≥4
+         of 11 or ≥3 of 10 blocks agree → some combination key
+         matches; detection within the radius is guaranteed, not
+         probabilistic). Bits are dealt to blocks by measured balance
+         (_deal) so correlated low-entropy bits can't produce giant
+         buckets. Up to _BROADCAST_MAX distinct sigs the pairing runs
+         in the broadcast numpy kernel on 4-of-11 keys
+         (_broadcast_sig_pairs — no keyed-row exchange at all); above
+         it, the grouped JVM emission on 3-of-10 keys is the scale form
       4. verification: F.bit_count(a XOR b) ≤ HAMMING_MAX, JVM-side,
          on candidate signature pairs; survivors expand back to doc
          pairs through two joins against the signature frame
@@ -593,61 +557,45 @@ def simhash_pairs(
     probe = uniq.limit(_BROADCAST_MAX + 1).collect()
     if len(probe) <= _BROADCAST_MAX:
         # the single driver pull serves both the bit-balance model and
-        # the kernel broadcast; the 64-sum JVM aggregate the other
-        # regimes use would be a whole extra job here (r12: ~1-2 s of
+        # the kernel broadcast; the 64-sum JVM aggregate the grouped
+        # path uses would be a whole extra job here (r12: ~1-2 s of
         # fixed overhead per query)
         sig_arr = np.array([r[0] for r in probe], dtype=np.int64)
         blocks = _balanced_blocks_np(sig_arr, _BCAST_BLOCKS)
         sig_pairs = _broadcast_sig_pairs(spark, sig_arr, blocks)
         return within.unionByName(_expand_doc_pairs(sig_pairs, sigs))
-    blocks, _n_distinct = _balanced_blocks(uniq)
+    # grouped bucket emission (the minhash/ngram family pattern): keyed
+    # rows shuffle ONCE into their (pair_idx, key_val) bucket and each
+    # bucket emits its sig combinations in-task. A keyed self-join here
+    # builds per-task hash relations over the whole keyed table (53M
+    # rows at sf10) and OOMs an 8 GB local JVM; the grouped form's peak
+    # memory is one bucket's sig array. Skew valve: see
+    # skew.bucket_pairs.
+    blocks = _balanced_blocks(uniq, _TRIPLE_BLOCKS)
     blocked = _with_pair_keys(uniq, "sig", blocks)
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    if len(blocks) == _PAIR_BLOCKS:
-        # small-corpus regime: plain keyed self-join — at ≤150k sigs
-        # the keyed table is a few million skinny rows and the join
-        # beats the grouped form's collect_list buffering (same-window
-        # A/B at sf1: 7.9 s join vs 10.2 s grouped)
-        a, b = blocked.alias("a"), blocked.alias("b")
-        raw_pairs = a.join(
-            b,
-            (F.col("a.pair_idx") == F.col("b.pair_idx"))
-            & (F.col("a.key_val") == F.col("b.key_val"))
-            & (F.col("a.sig") < F.col("b.sig")),
-        ).select(
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-    else:
-        # large-corpus regime: grouped bucket emission (the
-        # minhash/ngram family pattern) — keyed rows shuffle ONCE into
-        # their (pair_idx, key_val) bucket and each bucket emits its sig
-        # combinations in-task. A keyed self-join here builds per-task
-        # hash relations over the whole keyed table (53M rows at sf10
-        # under the triple scheme) and OOMs an 8 GB local JVM; the
-        # grouped form's peak memory is one bucket's sig array. Skew
-        # valve: see skew.bucket_pairs.
-        buckets = (
-            blocked.groupBy("pair_idx", "key_val")
-            .agg(F.array_sort(F.collect_list("sig")).alias("ms"))
-            .filter(F.size("ms") > 1)
-        )
-        # materialize ONCE (r12): three consumers read this aggregation
-        # (small combos, and both legs of the over-bucket self-join),
-        # and they schedule as parallel subtrees of one action — without
-        # an eager persist each recomputed the 60M-keyed-row shuffle+agg
-        # (the sf10 profile read 26 s per recompute: 87 s e2e vs 45 s of
-        # once-each stage time). The persisted frame is bucket-sized
-        # (pairs of longs + sig arrays), far smaller than the keyed
-        # rows; released by the suite's per-query clearCache like the
-        # sibling pair persists.
-        buckets = buckets.persist()
-        buckets.count()
-        raw_pairs = bucket_pairs(
-            buckets, ["pair_idx", "key_val"], "ms"
-        ).select(F.col("a").alias("sig_a"), F.col("b").alias("sig_b"))
+    buckets = (
+        blocked.groupBy("pair_idx", "key_val")
+        .agg(F.array_sort(F.collect_list("sig")).alias("ms"))
+        .filter(F.size("ms") > 1)
+    )
+    # materialize ONCE (r12): three consumers read this aggregation
+    # (small combos, and both legs of the over-bucket self-join), and
+    # they schedule as parallel subtrees of one action — without an
+    # eager persist each recomputed the 60M-keyed-row shuffle+agg (the
+    # sf10 profile read 26 s per recompute: 87 s e2e vs 45 s of
+    # once-each stage time). The persisted frame is bucket-sized (pairs
+    # of longs + sig arrays), far smaller than the keyed rows; released
+    # by the suite's per-query clearCache like the sibling pair
+    # persists.
+    buckets = buckets.persist()
+    buckets.count()
     sig_pairs = (
-        raw_pairs.withColumn("hamming", hamming.cast("int"))
+        bucket_pairs(buckets, ["pair_idx", "key_val"], "ms")
+        .select(F.col("a").alias("sig_a"), F.col("b").alias("sig_b"))
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int"),
+        )
         .filter(F.col("hamming") <= HAMMING_MAX)
         .dropDuplicates(["sig_a", "sig_b"])
     )

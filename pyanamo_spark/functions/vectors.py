@@ -16,7 +16,12 @@ from pyanamo_spark.registry import register
 
 def duckdb_dot_sql(a: str, b: str) -> str:
     """DuckDB dot product in pure DOUBLE (matches the Spark
-    zip_with/aggregate fold element-for-element)."""
+    zip_with/aggregate fold element-for-element).
+
+    DuckDB's built-in list_cosine_similarity accumulates FLOAT[] inputs
+    in float32 and returns FLOAT — it diverges from double math in the
+    7th digit, so oracles build cosine from this and duckdb_sq_sum_sql
+    instead, every element cast to double first."""
     return (
         f"list_sum(list_transform(list_zip({a}, {b}),"
         f" t -> CAST(t[1] AS DOUBLE) * CAST(t[2] AS DOUBLE)))"
@@ -29,26 +34,6 @@ def duckdb_sq_sum_sql(v: str) -> str:
         f"list_sum(list_transform({v},"
         f" x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
     )
-
-
-def duckdb_cosine_sql(a: str, b: str) -> str:
-    """DuckDB SQL for cosine similarity computed entirely in DOUBLE.
-
-    DuckDB's built-in list_cosine_similarity accumulates FLOAT[] inputs
-    in float32 and returns FLOAT — it diverges from double math in the
-    7th digit, so oracles mirror the Spark expression tree instead:
-    dot / sqrt(xx * yy), every element cast to double first.
-    """
-    def sq(v: str) -> str:
-        return (
-            f"list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-        )
-
-    dot_ab = (
-        f"list_sum(list_transform(list_zip({a}, {b}),"
-        f" t -> CAST(t[1] AS DOUBLE) * CAST(t[2] AS DOUBLE)))"
-    )
-    return f"({dot_ab} / sqrt({sq(a)} * {sq(b)}))"
 
 
 def dot(a: Column, b: Column) -> Column:

@@ -46,14 +46,14 @@ EXCHANGE_BUDGET = {
     # dedup + the two verify join-backs; r09 adds the planted-mutant
     # audit join, whose exchanged rows are (doc_id, flag) for the
     # n/100 planted docs only
-    "q_dedup_simhash": 12,  # sig-group collapse added two aggregates
-    # (distinct sigs + the 64-bit-frequency balance model) on top of
-    # the within-group join, block-pair self-join, and the two member
-    # expansion joins; every exchanged row is (sig) or (sig, key) —
-    # 16 bytes — and the r05 sf1 gate shows the result: 3.6x cost at
-    # 10x data where the 2-exchange form was 98x. r09's audit adds the
-    # dup-truth text-equality join and the two found-agreement joins
-    # (flag-sized rows over the planted set)
+    "q_dedup_simhash": 12,  # sig-group collapse: the distinct-sig
+    # aggregate and the within-group join, the broadcast kernel's
+    # combo-id repartition (fixture scale is below _BROADCAST_MAX), and
+    # the two member expansion joins; every exchanged row is a few
+    # longs (sigs, doc ids, combo ids), and the r05 sf1 gate shows the
+    # result: 3.6x cost at 10x data where the 2-exchange form was 98x.
+    # r09's audit adds the dup-truth text-equality join and the two
+    # found-agreement joins (flag-sized rows over the planted set)
     "q_dedup_ngram": 8,  # prefix-filter form (r06): prefix self-join,
     # candidate distinct, and the two verify join-backs; rows are
     # (doc, hash) ids except the verify joins. The price bought the

@@ -7,6 +7,7 @@ from __future__ import annotations
 from collections import Counter
 from unittest import mock
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -120,39 +121,36 @@ def test_simhash_finds_mutants_within_radius(spark, sf_dir):
     assert all(r.hamming <= HAMMING_MAX for r in rows)
 
 
-def test_simhash_triple_scheme_matches_pair_scheme(spark, sf_dir):
-    """The adaptive blocking (r11/r12) must be output-invariant across
-    ALL THREE regimes: the broadcast numpy kernel (the default at
-    fixture scale), the 9-block pair-key JVM join, and the 10-block
-    triple-key grouped JVM emission (the >_BROADCAST_MAX scale form).
-    Each only fires in its measured window, so pin equality here by
-    forcing the switches and comparing full pair sets. All three carry
-    the same pigeonhole guarantee; any divergence is a blocking-recall
-    (or broadcast first-combo-dedup) bug."""
+def test_simhash_grouped_path_matches_broadcast_kernel(spark, sf_dir):
+    """simhash_pairs has two pairing paths: the broadcast numpy kernel
+    (4-of-11 blocks, up to _BROADCAST_MAX distinct sigs, so every
+    fixture) and the grouped JVM emission (3-of-10 blocks) above it.
+    Force the grouped path, check through spies that each run took the
+    path it was meant to, and compare full pair sets. Both carry the
+    same pigeonhole guarantee; any divergence is a blocking-recall (or
+    the kernel's first-combo dedup) bug."""
     from pyanamo_spark import semantics
     from pyanamo_spark.dedup import simhash as sh
 
+    def run():
+        with mock.patch.object(
+            sh, "_balanced_blocks", wraps=sh._balanced_blocks
+        ) as grouped, mock.patch.object(
+            sh, "_broadcast_sig_pairs", wraps=sh._broadcast_sig_pairs
+        ) as kernel:
+            rows = sorted(
+                (r.doc_a, r.doc_b, r.hamming)
+                for r in sh.simhash_pairs(spark).collect()
+            )
+        return rows, grouped.call_count, kernel.call_count
+
     semantics.ensure_views(spark, sf_dir)
-    base = sorted(
-        (r.doc_a, r.doc_b, r.hamming)
-        for r in sh.simhash_pairs(spark).collect()
-    )
-    old_bc, old_tri = sh._BROADCAST_MAX, sh._TRIPLE_SWITCH
-    sh._BROADCAST_MAX = 0  # force the JVM pair-key path
-    try:
-        pair = sorted(
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in sh.simhash_pairs(spark).collect()
-        )
-        sh._TRIPLE_SWITCH = 0  # force the JVM triple-key path
-        tri = sorted(
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in sh.simhash_pairs(spark).collect()
-        )
-    finally:
-        sh._BROADCAST_MAX, sh._TRIPLE_SWITCH = old_bc, old_tri
-    assert base == pair
-    assert base == tri
+    base, n_grouped, n_kernel = run()
+    assert (n_grouped, n_kernel) == (0, 1)
+    with mock.patch.object(sh, "_BROADCAST_MAX", 0):
+        forced, n_grouped, n_kernel = run()
+    assert (n_grouped, n_kernel) == (1, 0)
+    assert base == forced
 
 
 def test_simhash_deterministic_across_runs(spark, sf_dir):
@@ -342,6 +340,55 @@ def test_ngram_null_lang_docs_pair_nothing(spark, planted_views):
     want = sorted(duck.execute(ORACLES["q_dedup_ngram"]).fetchall())
     duck.close()
     assert want == [(5, 7, 1.0)]
+    assert got == want
+
+
+@pytest.mark.parametrize("shard_rows", [None, 1])
+def test_embed_null_label_vectors_pair_nothing(
+    spark, planted_views, shard_rows
+):
+    """The oracle joins ``ON a.label = b.label``, which never holds for
+    a NULL label: two near-identical NULL-label vectors are no pair,
+    while the same shape under label 1 is. ``shard_rows=1`` shrinks
+    _SHARD_ROWS below half of label 1's three rows, so the labels take
+    the tile path instead of the single-block one."""
+    import duckdb
+
+    from pyanamo_spark.dedup import embedding as em
+    from pyanamo_spark.registry import ORACLES
+
+    rows = [
+        (1, [1.0, 0.125, 0.0, 0.0], None),
+        (2, [1.0, 0.0, 0.0, 0.0], None),
+        (3, [0.0, 1.0, 0.125, 0.0], 1),
+        (4, [0.0, 1.0, 0.0, 0.0], 1),
+        (5, [0.0, 0.0, 0.0, 1.0], 2),
+        (6, [0.0, 0.0, 1.0, 0.0], 1),
+    ]
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).createOrReplaceTempView("embeddings")
+    spark.conf.set("pyanamo_spark.views.sf_dir", "planted")
+    shards = em._SHARD_ROWS if shard_rows is None else shard_rows
+    try:
+        with mock.patch.object(em, "_SHARD_ROWS", shards):
+            got = sorted(
+                tuple(r)
+                for r in QUERIES["q_dedup_embed"]
+                .__wrapped__(spark, "planted")
+                .collect()
+            )
+    finally:
+        spark.catalog.clearCache()
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE TABLE embeddings"
+        " (vec_id BIGINT, embedding FLOAT[], label INTEGER)"
+    )
+    duck.executemany("INSERT INTO embeddings VALUES (?, ?, ?)", rows)
+    want = sorted(duck.execute(ORACLES["q_dedup_embed"]).fetchall())
+    duck.close()
+    assert [p[:2] for p in want] == [(3, 4)]
     assert got == want
 
 
