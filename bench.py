@@ -10,7 +10,8 @@ run-to-run (shared VM): the min of three runs measures the query's
 actual cost, not the noise floor — best-of-2 still let load spikes
 masquerade as 1.3-1.7x per-query regressions in the r04 review. The
 full record goes to BENCH_full.json; ``errors`` holds queries with no
-successful rep and ``rep_errors`` the count of raising reps.
+successful rep, ``rep_errors`` the count of raising reps and
+``compiles`` each query's Janino compiles per rep.
 """
 
 from __future__ import annotations
@@ -74,6 +75,7 @@ def main() -> None:
         "sf": sf,
         "errors": errors,
         "rep_errors": rep_errors,
+        "compiles": run.compiles,
     }
     # Full per-query detail goes to a file: a 97-query dict makes the
     # stdout line ~3 KB, and the driver's capture keeps only a tail of

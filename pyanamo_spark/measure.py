@@ -5,7 +5,11 @@
 declared queries the same way:
 
 - one warm-up (``q_state_counts`` collected) before any timed rep, so
-  JVM start, codegen and parquet footer reads fall outside the timings;
+  JVM start and parquet footer reads fall outside the timings. A
+  query's generated classes are compiled in its first rep; later reps
+  find most of them in Spark's generated-class cache (sized by
+  ``session.CODEGEN_CACHE_ENTRIES``). Every rep's Janino compiles are
+  counted, outside the timed window, in ``Timings.compiles``;
 - each rep builds the query and runs it to completion into the
   ``noop`` sink, so every row materializes but none is shipped to the
   driver;
@@ -46,6 +50,8 @@ class Timings:
     times: dict[str, list[float | None]]
     #: name -> text of its last raising rep
     last_error: dict[str, str] = field(default_factory=dict)
+    #: name -> Janino compiles during each pass's rep
+    compiles: dict[str, list[int]] = field(default_factory=dict)
 
     @property
     def best(self) -> dict[str, float]:
@@ -68,15 +74,23 @@ class Timings:
         return {n: ts.count(None) for n, ts in self.times.items() if None in ts}
 
 
+def _compile_count(spark) -> int:
+    """Janino compiles of generated code so far in this JVM (a
+    generated-class cache hit does not count)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
+
+
 def best_of(spark, sf_dir: str, names, reps: int) -> Timings:
     """Time every name ``reps`` times, pass-major, after one warm-up."""
     names = list(names)
-    out = Timings({n: [] for n in names})
+    out = Timings({n: [] for n in names}, compiles={n: [] for n in names})
     QUERIES["q_state_counts"](spark, sf_dir).collect()  # warm-up
     sc = spark.sparkContext
     for rep in range(reps):
         for name in names:
             sc.setJobGroup(name, f"{name}#r{rep}")
+            compiled = _compile_count(spark)
             t0 = time.perf_counter()
             try:
                 df = QUERIES[name](spark, sf_dir)
@@ -96,4 +110,5 @@ def best_of(spark, sf_dir: str, names, reps: int) -> Timings:
                 sc.setLocalProperty("spark.job.description", None)
                 spark.catalog.clearCache()
             out.times[name].append(dt)
+            out.compiles[name].append(_compile_count(spark) - compiled)
     return out

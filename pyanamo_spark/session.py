@@ -7,6 +7,8 @@ written for a multi-executor cluster at ~100 TB:
     coalesces from a deliberately-high initial number
   - Arrow enabled so the few Pandas-UDF stages batch-transfer
   - UTC session timezone so timestamp semantics match the DuckDB oracle
+  - a generated-class cache big enough for the whole declared suite, so
+    a warm query reuses its compiled classes instead of recompiling them
 """
 
 from __future__ import annotations
@@ -16,6 +18,17 @@ import sys
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: ``spark.sql.codegen.cache.maxEntries``: Spark's LRU cache of compiled
+#: generated classes. Spark's default of 100 is smaller than one
+#: ``q_dedup_clusters`` call (114 classes), so every class is evicted
+#: before its next use and each warm call runs Janino and then the JIT
+#: again on fresh bytecode. Measured with an unbounded cache (4 cores,
+#: Spark 4.1): a cold pass over all 196 declared queries compiles 2563
+#: distinct classes at sf0.01 and 2573 at sf0.1, a second pass 88 and 94
+#: more. This is the next power of two above 1.5x the larger working set;
+#: Metaspace ends at 216 MB, against 205 MB at the default.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def _activate_protobuf_shim() -> None:
@@ -79,6 +92,8 @@ def get_spark(app_name: str = "pyanamo_spark", cpus: int | str | None = None) ->
         # let Python data sources (sources/item_store.py) accept pushed
         # filters — the GSI-seek semantics at the source boundary
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # a static SQL conf: only the builder can set it
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -19,7 +19,7 @@ load_all()
 def spark():
     from pyanamo_spark.session import get_spark
 
-    spark = get_spark("pyanamo-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    spark = get_spark("pyanamo-spark-tests")
     yield spark
 
 

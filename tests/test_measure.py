@@ -5,7 +5,10 @@ and a query's time is its fastest rep."""
 
 from __future__ import annotations
 
+import importlib.util
+import sys
 import time
+from pathlib import Path
 
 import pytest
 
@@ -84,3 +87,22 @@ def test_reported_time_is_the_fastest_rep(spark, sf_dir, monkeypatch):
     assert run.best["q_measure_slow"] == min(times)
     assert times.index(min(times)) == 1
     assert times[1] < 0.4 <= times[0]
+
+
+def test_warm_reps_compile_no_new_classes(spark, sf_dir, monkeypatch):
+    """Spark's generated-class cache holds every class the perfbench
+    queries compile, so their warm reps reuse them instead of running
+    Janino (and then the JIT) again. At Spark's default cache of 100
+    entries every rep recompiles about as much as the first."""
+    bench = Path(__file__).resolve().parent.parent / "perfbench" / "run.py"
+    monkeypatch.setattr(sys, "path", sys.path[:])  # run.py prepends to it
+    spec = importlib.util.spec_from_file_location("perfbench_run", bench)
+    perfbench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(perfbench)
+    names = sorted(
+        {n for ops in perfbench.WORKLOADS.values() for n in ops} - {perfbench.ENGINE_OP}
+    )
+    run = best_of(spark, sf_dir, names, reps=3)
+    assert run.rep_errors == {}
+    first, last = (sum(c[rep] for c in run.compiles.values()) for rep in (0, -1))
+    assert last <= 0.05 * first, run.compiles
