@@ -7,6 +7,16 @@ over ``corpus_with_mutants``: documents plus a deterministic mutated
 copy of every 100th doc (two tokens appended, doc_id offset by
 1,000,000). The construction is pure SQL, so DuckDB oracles can rebuild
 the identical corpus.
+
+The n-gram family (q_dedup_ngram, q_dedup_contain, q_dedup_clusters)
+shares the frames ``ngram_index`` persists on every call: the tokenized
+corpus and the FAMILY_MIN_T prefix pool. q_dedup_ngram also persists
+its verified (doc_a, doc_b, jaccard) pair frame, which is output-sized
+and which q_dedup_clusters closes into components. Spark's cache
+manager shares that data between calls that do not clear the cache,
+so in such a session the first family member to run pays the one
+build. Containment additionally prunes candidates with the exact
+container-size bound |B| >= ceil(T*|A|) (dedup/ngram.py).
 """
 
 from __future__ import annotations

@@ -23,6 +23,16 @@ The oracle replays components declaratively: a recursive CTE closes
 the edge relation and takes min reachable per node — exponential-ish
 in cluster size, fine for fixture-scale clusters, never the production
 path (that's the point of the Spark form).
+
+q_dedup_clusters' static plan is only the final label select: each
+propagation round is checkpointed as it runs, so the round count
+never prints. Its input pair graph is q_dedup_ngram's persisted
+verified pair frame; in a session that does not clear the cache
+between family queries, Spark's cache manager serves the rebuilt
+identical plan from that data, so candidates and verification run
+once. The timing loop (pyanamo_spark/measure.py) clears the cache
+after every rep, so a q_dedup_clusters timing includes one full index
+build, pair generation and the closure.
 """
 
 from __future__ import annotations

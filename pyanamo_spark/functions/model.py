@@ -442,7 +442,7 @@ def q_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     With the filter stated once on keyed, the subtrees canonicalize
     equal and the duplicate exchange dedups at runtime: executed
     (isFinalPlan=true) plan goes 8 parquet scans / 2 ReusedExchange →
-    7 scans / 4 ReusedExchange (plans/r13/q_crossval_*.txt). sf0.1
+    7 scans / 4 ReusedExchange (plan dumps in commit 56af8aa). sf0.1
     wall-clock is parity-in-noise in an interleaved in-process A/B
     (best 2.11 → 2.11 s, then 1.54 → 1.83 s on the rerun — the extra
     stage overlaps other subtrees on 32 idle cores); the claim is the

@@ -1,8 +1,8 @@
 """The one timing loop behind every measurement script.
 
-``bench.py``, ``scripts/scale_gate.py``, ``scripts/bench_scale.py``,
-``scripts/time_queries.py`` and ``scripts/profile_suite.py`` all time
-declared queries the same way:
+``bench.py``, ``scripts/scale_gate.py``, ``scripts/bench_scale.py``
+and ``scripts/profile_suite.py`` all time declared queries the same
+way:
 
 - one warm-up (``q_state_counts`` collected) before any timed rep, so
   JVM start and parquet footer reads fall outside the timings. A

@@ -10,20 +10,29 @@ rules (SURVEY.md §4, the repo's scale contract):
   - shuffles: count Exchange nodes — flag queries with more exchanges
     than their shape warrants.
 
+Each plan is also reduced to a fingerprint: the sorted operator
+multiset of its tree and a sha1 of it.
+
 Usage: python scripts/explain_audit.py [sf_dir] [query ...]
-Writes PLANS.md with one section per query.
+With no query names it rewrites PLANS.md, one row per declared query
+(``pytest -m plan_audit`` checks the live plans against those rows);
+with names it prints their rows and writes nothing.
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import sys
+from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyanamo_spark.registry import QUERIES, load_all
 from pyanamo_spark.session import get_spark
+
+PLANS_MD = Path(__file__).resolve().parent.parent / "PLANS.md"
 
 #: queries whose shape legitimately needs N exchanges (joins/groupbys);
 #: anything above its entry is flagged. Default budget is 2.
@@ -488,46 +497,6 @@ EXCHANGE_BUDGET = {
 }
 
 
-#: per-query prose notes emitted into PLANS.md: design-budget records
-#: the STATIC plan cannot show (iterative round counts, shared-cache
-#: cost attribution) — VERDICT r06 item 6 asks for the diameter
-#: argument on record.
-PLAN_NOTES = {
-    "q_dedup_clusters": (
-        "Iterative operator: the printed plan is only the final label "
-        "select — connected components runs min-label propagation at "
-        "ONE shuffle per round with rounds = pair-graph DIAMETER. "
-        "Duplicate graphs are near-cliques: the mutant corpus "
-        "converges in 1 round past the seeded neighbor-min aggregate "
-        "(diameter <= 2), so the round budget is 2-3 shuffles over a "
-        "(long, long) edge list. If a corpus ever measures deeper "
-        "(propagation still changing after 5 rounds), the operator "
-        "auto-escalates to alternating large-star/small-star with an "
-        "O(log n) round bound (dedup/clusters.py). The input pair "
-        "graph is q_dedup_ngram's verified_ngram_pairs frame, persisted "
-        "on every call; in a session that does not clear the cache "
-        "between family queries, Spark's cache manager serves the "
-        "rebuilt identical plan from that data, so candidates+verify "
-        "run once. BENCH numbers are per-query COLD by harness design "
-        "(bench.py clearCache()s between queries), so the archived "
-        "clusters figure includes one full index build + pair "
-        "generation + CC."
-    ),
-    "q_dedup_ngram": (
-        "Every family call persists the shared ngram_index frames "
-        "(tokenized corpus + FAMILY_MIN_T prefix pool) and q_dedup_ngram "
-        "also persists the verified (doc_a, doc_b, jaccard) pair frame "
-        "(output-sized — q_dedup_clusters closes the same pairs into "
-        "components). Spark's cache manager shares that data between "
-        "calls that do not clear the cache, so without a clearCache "
-        "the first of the three to run pays the ~one build (r08: "
-        "family total at sf1 measured 66 s -> ~34 s; contain "
-        "additionally prunes candidates with the exact container-size "
-        "bound |B| >= ceil(T*|A|))."
-    ),
-}
-
-
 def cached_node_ranges(plan: str) -> list[tuple[int, int]]:
     """(lo, hi] node-id spans of cached subtrees in a formatted plan.
 
@@ -775,11 +744,63 @@ def audit_plan(name: str, plan: str) -> list[str]:
     return flags
 
 
-def tree_only(plan: str) -> str:
-    """Keep the operator tree; drop the per-node detail sections
-    (they run to hundreds of lines for sketch aggregates)."""
-    cut = plan.find("\n(1)")
-    return plan[:cut] if cut != -1 else plan
+def plan_fingerprint(plan: str) -> tuple[str, str]:
+    """(operator multiset, 12-hex sha1 of it) for a formatted plan.
+
+    The multiset counts the tree section's operator labels with node
+    numbers (and anything printed after them), tree glyphs and the
+    codegen ``*`` stripped, sorted by label:
+    ``Exchange×3,HashAggregate×4,…``. The per-node details, where the
+    ``#`` expression ids print, are left out. Node and expression ids
+    shift with unrelated edits and session history; the multiset
+    changes only when the plan's shape does."""
+    details = re.search(r"^\(\d+\) ", plan, re.M)
+    ops: Counter[str] = Counter()
+    for line in plan[: details.start() if details else None].splitlines():
+        label = re.split(r" \(\d+\)", line, maxsplit=1)[0]
+        label = label.lstrip(" :+-*").strip()
+        if label and not label.startswith("=="):
+            ops[label] += 1
+    multiset = ",".join(f"{op}×{n}" for op, n in sorted(ops.items()))
+    return multiset, hashlib.sha1(multiset.encode()).hexdigest()[:12]
+
+
+def sweep(spark, sf_dir: str, names) -> dict[str, tuple]:
+    """{name: (flags, exchanges, fingerprint)} for each named query.
+
+    The cache is cleared before each build, so frames an earlier query
+    persisted never print inside this one's plan: a row describes the
+    query alone, whatever ran before it."""
+    out = {}
+    for name in names:
+        spark.catalog.clearCache()
+        df = QUERIES[name](spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            df._jdf.queryExecution(), "formatted"
+        )
+        out[name] = (
+            audit_plan(name, plan),
+            count_exchanges(plan),
+            plan_fingerprint(plan),
+        )
+    spark.catalog.clearCache()
+    return out
+
+
+def plan_row(name: str, flags: list[str], exchanges: int, fingerprint) -> str:
+    """One PLANS.md table row."""
+    ops, digest = fingerprint
+    status = "; ".join(flags) if flags else "ok"
+    return f"| {name} | {status} | {exchanges} | `{digest}` | {ops} |"
+
+
+def committed_rows() -> dict[str, str]:
+    """{query name: row} of the committed PLANS.md table."""
+    return {
+        ln.split(" | ", 1)[0][2:]: ln
+        for ln in PLANS_MD.read_text().splitlines()
+        if ln.startswith("| q_")
+    }
 
 
 def main() -> int:
@@ -788,28 +809,28 @@ def main() -> int:
     load_all()
     names = args[1:] or sorted(QUERIES)
     spark = get_spark("plan-audit")
-    sections = []
-    flagged = 0
-    for name in names:
-        df = QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
-        flags = audit_plan(name, plan)
-        flagged += bool(flags)
-        status = "; ".join(flags) if flags else "ok"
-        print(f"[{'FLAG' if flags else 'ok  '}] {name}: {status}")
-        note = PLAN_NOTES.get(name)
-        body = f"{status}\n\n{note}" if note else status
-        sections.append(
-            f"## {name}\n\n{body}\n\n```\n{tree_only(plan).strip()}\n```\n"
-        )
-    Path("PLANS.md").write_text(
-        "# Physical-plan audit (explain formatted)\n\n"
-        f"sf_dir: {sf_dir}; {flagged} of {len(names)} queries flagged.\n\n"
-        + "\n".join(sections)
+    try:
+        rows = sweep(spark, sf_dir, names)
+    finally:
+        spark.stop()
+    table = "\n".join(plan_row(name, *row) for name, row in rows.items())
+    flagged = sum(bool(flags) for flags, _, _ in rows.values())
+    summary = (
+        f"sf_dir: {Path(sf_dir).name}; {flagged} of {len(names)} queries flagged."
     )
-    print(f"\n{flagged} of {len(names)} flagged; full plans in PLANS.md")
+    print(f"{table}\n\n{summary}")
+    if not args[1:]:  # a run over named queries only prints its rows
+        PLANS_MD.write_text(
+            "# Physical-plan record\n\n"
+            "One row per declared query, rewritten by "
+            "`python scripts/explain_audit.py` and checked by "
+            "`pytest -m plan_audit`: audit status, `count_exchanges`, and "
+            "the sha1 of the plan tree's operator multiset (last column). "
+            "Each query is built alone, after `clearCache()`.\n\n"
+            f"{summary}\n\n"
+            "| query | audit | exchanges | sha1 | operators |\n"
+            f"|---|---|---|---|---|\n{table}\n"
+        )
     return 0
 
 

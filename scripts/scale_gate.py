@@ -68,62 +68,11 @@ def main() -> int:
         print(f"[{status}] {name:24s} {took} (budget {budget:.1f}s)")
     if run.rep_errors:
         print(f"raising reps: {run.rep_errors}")
-    _print_suite_ratio()
     if failures:
         print(f"scale gate FAILED: {', '.join(failures)}")
         return 1
     print("scale gate passed")
     return 0
-
-
-def _print_suite_ratio() -> None:
-    """Suite-level regression line: latest full bench vs the frozen
-    baseline (BASELINE_QUERIES.json — r01 values where the r01
-    recording survived, earliest complete archive otherwise, with a
-    per-id provenance field), summed over the shared query ids.
-    Informational — per-query budgets above are the gate; this tracks
-    drift of the whole suite across rounds against ONE stable
-    denominator."""
-    import json
-
-    repo = Path(__file__).resolve().parent.parent
-    try:
-        base = json.loads((repo / "BASELINE_QUERIES.json").read_text())
-        cur = json.loads((repo / "BENCH_full.json").read_text())
-    except OSError:
-        print("[ratio] skipped: baseline or BENCH_full.json missing")
-        return
-    shared = sorted(set(base["queries"]) & set(cur["queries"]))
-    if not shared or cur.get("sf") != base.get("sf"):
-        print(
-            f"[ratio] skipped: sf mismatch (baseline {base.get('sf')}, "
-            f"current {cur.get('sf')}) or no shared ids"
-        )
-        return
-    prov = base.get("provenance", {})
-    b = sum(base["queries"][q] for q in shared)
-    c = sum(cur["queries"][q] for q in shared)
-    worst = sorted(
-        shared, key=lambda q: -(cur["queries"][q] / max(base["queries"][q], 1e-9))
-    )[:3]
-    detail = ", ".join(
-        f"{q} {base['queries'][q]:.2f}->{cur['queries'][q]:.2f}s"
-        f" [{prov.get(q, '?')}]"
-        for q in worst
-    )
-    by_prov: dict[str, list[str]] = {}
-    for q in shared:
-        by_prov.setdefault(prov.get(q, "?"), []).append(q)
-    prov_detail = ", ".join(
-        f"{p}: {sum(cur['queries'][q] for q in qs):.1f}s/"
-        f"{sum(base['queries'][q] for q in qs):.1f}s over {len(qs)}"
-        for p, qs in sorted(by_prov.items())
-    )
-    print(
-        f"[ratio] suite vs frozen baseline over {len(shared)} shared "
-        f"queries: {c:.1f}s / {b:.1f}s = {c / b:.2f}x "
-        f"(by provenance: {prov_detail}; top regressions: {detail})"
-    )
 
 
 if __name__ == "__main__":

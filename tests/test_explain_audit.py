@@ -5,6 +5,7 @@ auditor regression would let real plan regressions through unflagged."""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -13,6 +14,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 from explain_audit import (  # noqa: E402
     audit_plan,
     count_exchanges,
+    plan_fingerprint,
     text_hash_exchanges,
 )
 
@@ -103,3 +105,22 @@ def test_no_similar_column_false_positive():
         ", text#", ", context#"
     )
     assert text_hash_exchanges(plan) == []
+
+
+def test_fingerprint_ignores_ids_and_sees_an_added_exchange():
+    ops, digest = plan_fingerprint(_CLEAN)
+    assert ops == "Exchange×3,Project×1,SortMergeJoin Inner×1", ops
+    assert len(digest) == 12
+    # renumbered nodes and expression ids: the same plan shape
+    renumbered = re.sub(
+        r"\((\d+)\)", lambda m: f"({int(m.group(1)) + 40})", _CLEAN
+    )
+    renumbered = re.sub(r"#(\d+)", lambda m: f"#{int(m.group(1)) + 7}", renumbered)
+    assert renumbered != _CLEAN
+    assert plan_fingerprint(renumbered) == (ops, digest)
+    # one more Exchange line in the tree is a different plan
+    grown = _CLEAN.replace(
+        "   +- Exchange (3)\n", "   +- Exchange (3)\n      +- Exchange (6)\n"
+    )
+    assert grown != _CLEAN
+    assert plan_fingerprint(grown)[1] != digest
